@@ -92,17 +92,3 @@ def tune_thresholds(decided: DataFrame, pseudo_gold: DataFrame,
     best = max(eligible or out, key=lambda o: o["f1"])
     return {"sweep": out, "best": best}
 
-
-def pseudo_gold_from_deterministic(doc_matches: DataFrame,
-                                   docs_n: DataFrame) -> DataFrame:
-    """The tuner's labels: exact/legacy-UPRN matches are trusted
-    (reference getKnownGoodMatches, threshold_tuner.go:185-243).
-    Returns (addr_id, uprn)."""
-    det = doc_matches.filter(
-        F.col("method").contains("legacy_uprn") |
-        F.col("method").contains("exact_canonical"))
-    return (det.join(docs_n.select("doc_id", "addr_can", "postcode"),
-                     "doc_id")
-            .select(F.sha2(F.concat_ws("|", "addr_can", "postcode"), 256)
-                    .alias("addr_id"), "uprn")
-            .distinct())

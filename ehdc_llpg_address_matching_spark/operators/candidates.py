@@ -156,10 +156,6 @@ def missing_legacy_uprns(docs_norm: DataFrame, gazp: DataFrame) -> DataFrame:
             .join(gaz_uprns, "uprn", "left_anti"))
 
 
-# back-compat alias (pre-round-4 name)
-_missing_legacy_uprns = missing_legacy_uprns
-
-
 def historic_uprn_records(docs_norm: DataFrame, gazp: DataFrame,
                           missing: DataFrame | None = None) -> DataFrame:
     """Bulk historic-UPRN creation — the reference's single largest
@@ -544,10 +540,11 @@ def cand_hierarchical(uaddr: DataFrame, gazp: DataFrame,
     level's distinct), where the probe pass runs all five semi joins
     CONCURRENTLY and the fetch pass all five full joins concurrently —
     critical path ~5 stages instead of ~10, and only one small frame
-    (ids + winning level) is cached instead of three level frames.
-    cache(), not an eager localCheckpoint, for the same reason as
-    before: lazy, so the probe subtree executes once inside the
-    downstream candidate-union job at full parallelism.
+    (ids + winning level) is materialized instead of three level frames.
+    That frame is an eager localCheckpoint: the probe pass runs once,
+    here, and all five fetch joins plan against one LogicalRDD leaf
+    instead of re-analyzing the probe subtree. The checkpoint stays
+    pinned; run_pipeline records it and drops it in ``release()``.
 
     Returns (addr_id, uprn, method='hier_<level>', method_conf=base).
     """
@@ -607,7 +604,7 @@ def cand_hierarchical(uaddr: DataFrame, gazp: DataFrame,
     winners = allp.groupBy("addr_id").agg(F.min("_lvl").alias("_lvl"))
     # addresses with no hit at any level drop out here (inner join),
     # exactly as they produced no rows before
-    d_ann = d.join(winners, "addr_id").cache()
+    d_ann = d.join(winners, "addr_id").localCheckpoint(eager=True)
 
     def lvl(df, name):
         return df.select("addr_id", "uprn",

@@ -7,9 +7,10 @@ documents -> span extraction -> canonicalize -> components -> SymSpell
 fan-out to documents ∪ legacy-UPRN direct matches -> connected
 components -> cluster consensus -> matches / audit / metrics.
 
-Each phase's output can be checkpointed to a Warehouse (Iceberg
-snapshot / parquet manifest) for resume — the Spark analog of the
-reference's layer snapshots (cmd/matcher-v2/main.go:3389-3421).
+Each phase's shared output is an eager localCheckpoint inside one run,
+or a Warehouse commit (Iceberg snapshot / parquet manifest) for resume
+in the phased runner — the Spark analog of the reference's layer
+snapshots (cmd/matcher-v2/main.go:3389-3421).
 """
 
 from __future__ import annotations
@@ -26,6 +27,7 @@ from .operators import scoring as S
 from .operators.blocking import with_blocking_keys
 from .operators.cluster import (build_edges, canonical_uprn_per_cluster,
                                 cluster_consensus, connected_components)
+from .session import Pins
 from .sources.documents import span_fingerprint, with_raw_address
 
 
@@ -87,29 +89,38 @@ def normalize_documents(docs: DataFrame, symspell: SymSpell | None) -> DataFrame
 
 def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
                  cfg: PipelineConfig | None = None,
-                 gazp_prepared: DataFrame | None = None) -> dict[str, DataFrame]:
+                 gazp_prepared: DataFrame | None = None) -> dict:
     """gazp_prepared: an already-prepared (prepare_gazetteer) frame —
     callers that run the pipeline repeatedly over the same gazetteer
     (streaming foreachBatch, threshold sweeps) prepare + persist it
     ONCE and pass it here instead of paying normalization + range
-    expansion per run."""
-    cfg = cfg or PipelineConfig()
+    expansion per run.
 
-    # --- phase: gazetteer prep (original ∪ range-expanded, keys, cache)
+    Every frame shared by several consumers is an eager localCheckpoint,
+    so later phases plan against a LogicalRDD leaf instead of
+    re-analyzing the lineage behind it. Those checkpoints stay pinned
+    until the caller invokes the returned ``release()``, which
+    unpersists every one the run made; a caller's ``gazp_prepared``
+    stays pinned. The returned frames read from that storage, so none
+    of them may be used after ``release()``."""
+    cfg = cfg or PipelineConfig()
+    pins = Pins(docs, gaz, gazp_prepared)
+
+    # --- phase: gazetteer prep (original ∪ range-expanded, keys);
+    #     adopt() also records prepare_gazetteer's own pre-expansion cut
     if gazp_prepared is not None:
         gazp = gazp_prepared
     else:
-        gazp = C.prepare_gazetteer(gaz)
-        gazp = gazp.cache()
+        gazp = pins.checkpoint(pins.adopt(C.prepare_gazetteer(gaz)))
 
     # --- phase: document normalization (+ SymSpell vs gazetteer vocab)
     sym = build_dictionary_from_gazetteer(gazp, addr_col="addr_core") \
         if cfg.enable_symspell else None
-    docs_n = normalize_documents(docs, sym).cache()
+    docs_n = pins.checkpoint(normalize_documents(docs, sym))
 
     # --- phase: dedup to unique addresses (J11) + blocking keys
     uaddr = C.prepare_unique_addresses(docs_n)
-    uaddr = with_blocking_keys(uaddr).cache()
+    uaddr = pins.checkpoint(with_blocking_keys(uaddr))
 
     # --- phase: candidate union
     gens = [
@@ -132,14 +143,13 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
             gens.append(C.cand_vector(uaddr, gazp, embed_dim=0,
                                       top_k=cfg.vector_top_k,
                                       min_sim=cfg.vector_min_sim))
-    gens.append(C.cand_hierarchical(uaddr, gazp))
-    # eager localCheckpoint, not cache: the union of 7 generators (each
-    # a join tree over uaddr/gazp) is a LARGE logical plan, and every
-    # downstream action re-ANALYZES it even when execution hits the
-    # cache — checkpointing materializes the (small) candidate set and
-    # truncates the plan, the same cut the warehouse snapshot makes
-    # between phases at scale (plans/phases.py)
-    cands = C.union_candidates(*gens).localCheckpoint(eager=True)
+    gens.append(pins.adopt(C.cand_hierarchical(uaddr, gazp)))
+    # the union of 7 generators (each a join tree over uaddr/gazp) is a
+    # large logical plan; the checkpoint materializes the (small)
+    # candidate set so scoring and the audit consumers plan against one
+    # leaf, the same cut the warehouse snapshot makes between phases at
+    # scale (plans/phases.py)
+    cands = pins.checkpoint(C.union_candidates(*gens))
 
     # --- phase: pair scoring (cheap column features -> JVM prefilter ->
     #     Arrow string-sim UDF -> weighted score). The checkpointed
@@ -172,7 +182,7 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
         # the real one share the materialized scored pairs instead of
         # re-running candidate generation + the Arrow UDF twice.
         from .operators.audit import tune_thresholds
-        best = best.localCheckpoint(eager=True)
+        best = pins.checkpoint(best)
         gold = (C.legacy_uprn_matches(docs_n, gazp)
                 .join(docs_n.select("doc_id", "addr_can", "postcode"),
                       "doc_id")
@@ -194,8 +204,8 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
             review=min(thresholds.review, medium),
             minimum=min(thresholds.minimum, tau),
             winner_margin=thresholds.winner_margin)
-    decided_narrow = D.decide(best, thresholds, top_k=cfg.top_k_audit) \
-        .localCheckpoint(eager=True)
+    decided_narrow = pins.checkpoint(
+        D.decide(best, thresholds, top_k=cfg.top_k_audit))
     # audit-only Levenshtein (F3) stays LAZY, layered over the
     # checkpointed decision table: the matches path never reads `lev`,
     # and computing the batch DP eagerly inside the checkpoint cost ~5 s
@@ -226,8 +236,7 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
     # path and the appendable historic_gazetteer output — the
     # gazetteer-UPRN distinct + anti-join (the expensive part at 10^8
     # gazetteer rows) must not re-execute per consumer.
-    missing = C.missing_legacy_uprns(docs_n, gazp) \
-        .localCheckpoint(eager=True)
+    missing = pins.checkpoint(C.missing_legacy_uprns(docs_n, gazp))
     historic = C.historic_uprn_matches(docs_n, gazp, missing=missing) \
         .withColumn("confidence", F.lit(1.0))
     # legacy/historic win where both exist (reference precedence:
@@ -242,13 +251,14 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
     wd = Window.partitionBy("doc_id").orderBy(
         F.asc("_prio"), F.desc("confidence"), F.desc("score"),
         F.asc("uprn"))
-    doc_matches = (both.withColumn("_rn", F.row_number().over(wd))
-                   .filter(F.col("_rn") == 1).drop("_rn", "_prio")) \
-        .localCheckpoint(eager=True)  # feeds CC + consensus + rescue + output
+    # feeds CC + consensus + rescue + output
+    doc_matches = pins.checkpoint(
+        both.withColumn("_rn", F.row_number().over(wd))
+        .filter(F.col("_rn") == 1).drop("_rn", "_prio"))
 
     # --- phase: connected components + consensus corrections + G2 rescue
     edges = build_edges(doc_matches, docs_n)
-    comps = connected_components(edges)
+    comps = pins.adopt(connected_components(edges))
     consensus = cluster_consensus(comps, doc_matches, docs_n)
     from .operators.rescue import group_fuzzy_rescue
     rescue = group_fuzzy_rescue(docs_n, doc_matches, gazp)
@@ -331,4 +341,5 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
         "matches": matches,
         "result": result,
         "metrics": metrics,
+        "release": pins.release,
     }

@@ -11,11 +11,18 @@ Scale notes (100 TB / 1000-executor design intent):
 
 from __future__ import annotations
 
+import logging
 import os
 
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+_log = logging.getLogger(__name__)
+# session conf marker: set once the session has run the ICU warm-up
+_ICU_WARMED = "ehdc.linkage.icuWarmedUp"
 
 
 def spread_for_udf(df):
@@ -68,6 +75,57 @@ def compact_reference_frame(df, target_bytes=64 << 20):
     if df.rdd.getNumPartitions() > 2 * n:
         return df.repartition(n)
     return df
+
+
+def checkpoint_rdds(df) -> list:
+    """The persisted RDDs under ``df``'s LogicalRDD leaves: the storage
+    that eager localCheckpoints in its lineage pin. DataFrame.unpersist()
+    only drops CacheManager entries and never reaches a checkpoint, so a
+    checkpoint is released by unpersisting these RDDs."""
+    rdds = []
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if (leaf.nodeName() == "LogicalRDD"
+                and leaf.rdd().getStorageLevel().isValid()):
+            rdds.append(leaf.rdd())
+    return rdds
+
+
+def release_checkpoint(df) -> None:
+    """Unpersist the checkpoints ``df`` reads from, without blocking."""
+    for rdd in checkpoint_rdds(df):
+        rdd.unpersist(False)
+
+
+class Pins:
+    """The eager localCheckpoints one run makes, released together.
+
+    ``checkpoint`` materializes a frame and records its storage.
+    ``adopt`` records the checkpoints a helper made inside a frame it
+    returns (prepare_gazetteer's pre-expansion cut, cand_hierarchical's
+    level table, connected_components' last round). Checkpoints under
+    the ``keep`` frames, the caller's inputs, are never recorded, so
+    ``release`` cannot drop storage the caller still reads."""
+
+    def __init__(self, *keep):
+        self._keep = {rdd.id() for df in keep if df is not None
+                      for rdd in checkpoint_rdds(df)}
+        self._rdds: dict[int, object] = {}
+
+    def adopt(self, df):
+        for rdd in checkpoint_rdds(df):
+            if rdd.id() not in self._keep:
+                self._rdds.setdefault(rdd.id(), rdd)
+        return df
+
+    def checkpoint(self, df):
+        return self.adopt(df.localCheckpoint(eager=True))
+
+    def release(self) -> None:
+        for rdd in self._rdds.values():
+            rdd.unpersist(False)
+        self._rdds.clear()
 
 
 def get_spark(
@@ -140,8 +198,14 @@ def get_spark(
     # local mode (driver == executor JVM) this removes the stall
     # entirely; on a multi-JVM cluster executors still lazy-init on
     # their first task exactly as before, so this is never worse.
-    try:
-        spark.sql("SELECT upper('icu warm-up')").collect()
-    except Exception:
-        pass
+    # getOrCreate hands back the running session on every later call,
+    # and that session already paid the load.
+    if spark.conf.get(_ICU_WARMED, None) is None:
+        try:
+            spark.sql("SELECT upper('icu warm-up')").collect()
+        except (PySparkException, Py4JError) as e:
+            # a failed warm-up only moves the ICU load back into the
+            # first task that upper-cases; the session itself is fine
+            _log.debug("ICU warm-up query failed: %s", e)
+        spark.conf.set(_ICU_WARMED, "true")
     return spark

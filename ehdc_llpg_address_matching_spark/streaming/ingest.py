@@ -36,7 +36,9 @@ def start_incremental_linkage(stream: DataFrame, gaz: DataFrame,
     gazetteer is prepared ONCE at stream start (normalize + range
     expansion + blocking keys, eager localCheckpoint so the work is
     materialized, not a lazy plan replayed per batch) and the closure
-    hands the prepared frame to every micro-batch run."""
+    hands the prepared frame to every micro-batch run. Each batch
+    releases its own run's checkpoints after its write, so the pinned
+    storage does not grow with the number of batches."""
     from ..operators import candidates as C
     from ..pipeline import PipelineConfig, run_pipeline
     cfg = cfg or PipelineConfig(enable_vector=False, enable_spatial=False,
@@ -51,6 +53,9 @@ def start_incremental_linkage(stream: DataFrame, gaz: DataFrame,
         (out["matches"]
          .withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(out_path))
+        # the batch's checkpoints are dead once its matches are written;
+        # the shared gazp is the caller's and stays pinned
+        out["release"]()
 
     w = (stream.writeStream
          .foreachBatch(process)

@@ -75,14 +75,25 @@ def test_streaming_incremental_linkage(spark, tmp_path, corpus):
             s.kind.alias("kind"), s.text.alias("text"),
             s.media_ref.alias("media_ref"),
             s.offset.cast("int").alias("offset")))
-    docs.limit(60).select("doc_id", respan.alias("spans")).write.parquet(src)
-    stream = read_document_stream(spark, src)
+    (docs.limit(60).select("doc_id", respan.alias("spans"))
+     .repartition(2).write.parquet(src))
+    # one file per micro-batch, so the run has two batches
+    stream = read_document_stream(spark, src, max_files_per_trigger=1)
     assert stream.isStreaming
+    pinned = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     q = start_incremental_linkage(stream, gaz, out, chk, cfg=CFG)
     q.awaitTermination(180)
     res = spark.read.parquet(out)
     assert res.count() >= 50
     assert "batch_id" in res.columns
+    assert res.select("batch_id").distinct().count() == 2
+    # each batch releases its run's checkpoints: only the gazetteer
+    # prepared at stream start stays pinned (prepare_gazetteer's
+    # pre-expansion cut and the prepared frame), however many batches.
+    # "-", not "==": the ContextCleaner may drop unrelated RDDs meanwhile
+    grown = set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) \
+        - pinned
+    assert len(grown) <= 2, grown
     # exactly-once-ish: rerunning with the same checkpoint adds nothing
     q2 = start_incremental_linkage(read_document_stream(spark, src),
                                    gaz, out, chk, cfg=CFG)

@@ -117,6 +117,69 @@ def test_attach_join_runs_once(spark, monkeypatch):
     assert {"d_core", "g_core", "lev"} <= set(out["audit_candidates"].columns)
 
 
+def _persistent_rdds(spark):
+    # compare with "-", not "==": the ContextCleaner may unpersist
+    # RDDs of earlier tests' garbage-collected frames at any time
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _cache_entries(spark):
+    # CacheManager keeps its entries private; read the count reflectively
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
+def test_shared_inputs_are_checkpoint_leaves(pipeline_out):
+    """The frames every generator reads are eager checkpoints: their
+    analyzed plan is one LogicalRDD leaf, not the lineage behind it
+    (a lazy cache() keeps the whole lineage in the plan)."""
+    out, _ = pipeline_out
+    for name in ("docs_normalized", "unique_addresses",
+                 "gazetteer_prepared"):
+        plan = out[name]._jdf.queryExecution().analyzed()
+        assert plan.getClass().getSimpleName() == "LogicalRDD", name
+
+
+def test_release_drops_every_pin(spark):
+    """release() unpersists every checkpoint the run made, helpers'
+    internal ones included, and the run adds no CacheManager entry."""
+    cfg = SynthConfig(seed=5, n_gazetteer=80, n_docs=100)
+    gaz, docs, _ = synth_tables(cfg)
+    d, g = spark.createDataFrame(docs), spark.createDataFrame(gaz)
+    rdds0, cached0 = _persistent_rdds(spark), _cache_entries(spark)
+    out = run_pipeline(spark, d, g, PipelineConfig(auto_tune=True))
+    assert out["matches"].count() > 0
+    out["audit_candidates"].count()
+    assert _persistent_rdds(spark) - rdds0
+    out["release"]()
+    assert not _persistent_rdds(spark) - rdds0
+    assert _cache_entries(spark) == cached0
+
+
+def test_release_keeps_caller_gazetteer(spark):
+    """A gazp_prepared the caller passes in is the caller's to release:
+    the run's release() leaves it pinned and readable."""
+    from ehdc_llpg_address_matching_spark.operators.candidates import \
+        prepare_gazetteer
+    from ehdc_llpg_address_matching_spark.session import checkpoint_rdds
+    cfg = SynthConfig(seed=5, n_gazetteer=80, n_docs=100)
+    gaz, docs, _ = synth_tables(cfg)
+    d, g = spark.createDataFrame(docs), spark.createDataFrame(gaz)
+    gazp = prepare_gazetteer(g).localCheckpoint(eager=True)
+    n = gazp.count()
+    pinned = _persistent_rdds(spark)
+    out = run_pipeline(spark, d, g, PipelineConfig(enable_vector=False),
+                       gazp_prepared=gazp)
+    assert out["matches"].count() > 0
+    out["release"]()
+    after = _persistent_rdds(spark)
+    assert not after - pinned
+    assert {rdd.id() for rdd in checkpoint_rdds(gazp)} <= after
+    assert gazp.count() == n
+
+
 def test_historic_uprn_length_gate(spark):
     """Digit fragments surviving clean_uprn_series (e.g. '3' from
     'FLAT 3' typed into the UPRN field) must NOT spawn historic
