@@ -7,17 +7,28 @@ documents -> span extraction -> canonicalize -> components -> SymSpell
 fan-out to documents ∪ legacy-UPRN direct matches -> connected
 components -> cluster consensus -> matches / audit / metrics.
 
-Each phase's shared output is an eager localCheckpoint inside one run,
-or a Warehouse commit (Iceberg snapshot / parquet manifest) for resume
-in the phased runner — the Spark analog of the reference's layer
-snapshots (cmd/matcher-v2/main.go:3389-3421).
+The DAG is written once, as one function per phase:
+
+  normalize_and_dedup   -> docs_normalized, unique_addresses
+  generate_candidates   -> candidates
+  score_and_decide      -> scored_pairs, audit_candidates
+  fan_out               -> doc_matches, historic_gazetteer
+  cluster_and_resolve   -> matches, clusters, metrics
+
+Each takes its materialized inputs, the PipelineConfig and the run's
+session.Pins, and returns its outputs by name. ``run_pipeline`` calls
+them in order inside one run, its shared frames eager localCheckpoints;
+``plans.phases.run_phased`` calls the same functions and commits each
+phase's outputs to a Warehouse (Iceberg snapshot / parquet manifest)
+for resume — the Spark analog of the reference's layer snapshots
+(cmd/matcher-v2/main.go:3389-3421).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .functions.normalize import with_normalized
 from .functions.symspell import SymSpell, build_dictionary_from_gazetteer
@@ -27,7 +38,7 @@ from .operators import scoring as S
 from .operators.blocking import with_blocking_keys
 from .operators.cluster import (build_edges, canonical_uprn_per_cluster,
                                 cluster_consensus, connected_components)
-from .session import Pins
+from .session import Pins, spread_for_udf
 from .sources.documents import span_fingerprint, with_raw_address
 
 
@@ -72,7 +83,6 @@ def normalize_documents(docs: DataFrame, symspell: SymSpell | None) -> DataFrame
     """Phase 1: derive raw_address from spans, canonicalize, parse,
     correct spellings, phonetic-encode. Adds span_fp for the
     span-sequence invariant check."""
-    from .session import spread_for_udf
     d = spread_for_udf(docs)
     for col in ("raw_uprn", "easting", "northing", "group_key"):
         if col not in d.columns:
@@ -87,42 +97,26 @@ def normalize_documents(docs: DataFrame, symspell: SymSpell | None) -> DataFrame
                            symspell=symspell)
 
 
-def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
-                 cfg: PipelineConfig | None = None,
-                 gazp_prepared: DataFrame | None = None) -> dict:
-    """gazp_prepared: an already-prepared (prepare_gazetteer) frame —
-    callers that run the pipeline repeatedly over the same gazetteer
-    (streaming foreachBatch, threshold sweeps) prepare + persist it
-    ONCE and pass it here instead of paying normalization + range
-    expansion per run.
+# The phase functions below look every operator up at call time (module
+# attributes, this module's globals, the rescue import inside
+# cluster_and_resolve), so a caller that swaps one on its module for
+# the duration of a run, like the traced benchmark job, sees its calls.
 
-    Every frame shared by several consumers is an eager localCheckpoint,
-    so later phases plan against a LogicalRDD leaf instead of
-    re-analyzing the lineage behind it. Those checkpoints stay pinned
-    until the caller invokes the returned ``release()``, which
-    unpersists every one the run made; a caller's ``gazp_prepared``
-    stays pinned. The returned frames read from that storage, so none
-    of them may be used after ``release()``."""
-    cfg = cfg or PipelineConfig()
-    pins = Pins(docs, gaz, gazp_prepared)
-
-    # --- phase: gazetteer prep (original ∪ range-expanded, keys);
-    #     adopt() also records prepare_gazetteer's own pre-expansion cut
-    if gazp_prepared is not None:
-        gazp = gazp_prepared
-    else:
-        gazp = pins.checkpoint(pins.adopt(C.prepare_gazetteer(gaz)))
-
-    # --- phase: document normalization (+ SymSpell vs gazetteer vocab)
+def normalize_and_dedup(docs: DataFrame, gazp: DataFrame,
+                        cfg: PipelineConfig, pins: Pins) -> dict:
+    """Document normalization (+ SymSpell vs the gazetteer vocabulary),
+    then dedup to unique addresses (J11) with blocking keys."""
     sym = build_dictionary_from_gazetteer(gazp, addr_col="addr_core") \
         if cfg.enable_symspell else None
     docs_n = pins.checkpoint(normalize_documents(docs, sym))
-
-    # --- phase: dedup to unique addresses (J11) + blocking keys
     uaddr = C.prepare_unique_addresses(docs_n)
-    uaddr = pins.checkpoint(with_blocking_keys(uaddr))
+    return {"docs_normalized": docs_n,
+            "unique_addresses": pins.checkpoint(with_blocking_keys(uaddr))}
 
-    # --- phase: candidate union
+
+def generate_candidates(uaddr: DataFrame, gazp: DataFrame,
+                        cfg: PipelineConfig, pins: Pins) -> dict:
+    """The candidate union over every enabled generator."""
     gens = [
         C.cand_exact_canonical(uaddr, gazp),
         C.cand_blocked(uaddr, gazp, hot_threshold=cfg.hot_key_threshold,
@@ -132,7 +126,7 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
     ]
     if cfg.enable_spatial:
         gens.append(C.cand_spatial(uaddr, gazp, radius_m=cfg.spatial_radius_m))
-    if cfg.enable_vector and "embedding" in gaz.columns:
+    if cfg.enable_vector and "embedding" in gazp.columns:
         if cfg.vector_mode == "ivf":
             gens.append(C.cand_vector_ivf(uaddr, gazp,
                                           top_k=cfg.vector_top_k,
@@ -143,36 +137,47 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
             gens.append(C.cand_vector(uaddr, gazp, embed_dim=0,
                                       top_k=cfg.vector_top_k,
                                       min_sim=cfg.vector_min_sim))
+    # J5 hierarchical cascade last: a doc matchable ONLY via the
+    # phonetic/locality levels (no postcode, trigram-block-defeating
+    # typo) has no other generator
     gens.append(pins.adopt(C.cand_hierarchical(uaddr, gazp)))
     # the union of 7 generators (each a join tree over uaddr/gazp) is a
     # large logical plan; the checkpoint materializes the (small)
     # candidate set so scoring and the audit consumers plan against one
     # leaf, the same cut the warehouse snapshot makes between phases at
     # scale (plans/phases.py)
-    cands = pins.checkpoint(C.union_candidates(*gens))
+    return {"candidates": pins.checkpoint(C.union_candidates(*gens))}
 
-    # --- phase: pair scoring (cheap column features -> JVM prefilter ->
-    #     Arrow string-sim UDF -> weighted score). The checkpointed
-    #     candidate set materializes AQE-coalesced (17 partitions at the
-    #     bench corpus), so the expensive fused prefilter+Arrow stage ran
-    #     17 tasks on 32 cores; spread_for_udf re-spreads it to the
-    #     session parallelism (no-op whenever the candidate set already
-    #     has >= cluster-cores partitions, i.e. at real scale). The
-    #     exposed "candidates" output stays the un-spread checkpoint.
-    from .session import spread_for_udf
+
+def score_and_decide(cands: DataFrame, docs_n: DataFrame, uaddr: DataFrame,
+                     gazp: DataFrame, cfg: PipelineConfig,
+                     pins: Pins) -> dict:
+    """Pair scoring, keep-best per (addr, uprn), the optional threshold
+    auto-tune, then the tiered decision. ``decisions`` is the narrow
+    decision table; ``audit_candidates`` layers the audit-only
+    Levenshtein over it."""
+    # pair scoring (cheap column features -> JVM prefilter -> Arrow
+    # string-sim UDF -> weighted score). The checkpointed candidate set
+    # materializes AQE-coalesced (17 partitions at the bench corpus), so
+    # the expensive fused prefilter+Arrow stage ran 17 tasks on 32
+    # cores; spread_for_udf re-spreads it to the session parallelism
+    # (no-op whenever the candidate set already has >= cluster-cores
+    # partitions, i.e. at real scale). The exposed "candidates" output
+    # stays the un-spread checkpoint.
     pairs = S.attach_pair_attrs(spread_for_udf(cands), uaddr, gazp)
     pairs = S.with_column_features(pairs)
     pairs = S.prefilter_pairs(pairs)
     pairs = S.with_pair_features(pairs)
     pairs = S.with_score(pairs, scorer=cfg.scorer)
 
-    # --- phase: decision on NARROW columns (the wide pair payload must
-    #     not ride through the two window shuffles). d_core/g_core ride
-    #     along in DECISION_COLS so the audit-only Levenshtein needs no
-    #     second attach join (round-2 re-executed the uaddr x gazp join
-    #     just to fetch the strings).
+    # decision on NARROW columns (the wide pair payload must not ride
+    # through the two window shuffles). d_core/g_core ride along in
+    # DECISION_COLS so the audit-only Levenshtein needs no second
+    # attach join (round-2 re-executed the uaddr x gazp join just to
+    # fetch the strings).
     best = D.keep_best_per_uprn(D.narrow_for_decision(pairs))
     thresholds = cfg.thresholds
+    out = {}
     if cfg.auto_tune:
         # A5/§5.4 tuner in the loop (reference threshold_tuner.go:
         # 246-271): legacy-UPRN-validated docs are trusted pseudo-gold;
@@ -204,6 +209,13 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
             review=min(thresholds.review, medium),
             minimum=min(thresholds.minimum, tau),
             winner_margin=thresholds.winner_margin)
+        out["tuning"] = best.sparkSession.createDataFrame(
+            [(float(o["threshold"]), int(o["tp"]), int(o["fp"]),
+              int(o["fn"]), float(o["precision"]), float(o["recall"]),
+              float(o["f1"])) for o in tuned["sweep"]],
+            "threshold double, tp long, fp long, fn long, "
+            "precision double, recall double, f1 double")
+        out["thresholds_used"] = thresholds
     decided_narrow = pins.checkpoint(
         D.decide(best, thresholds, top_k=cfg.top_k_audit))
     # audit-only Levenshtein (F3) stays LAZY, layered over the
@@ -214,10 +226,23 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
     # audit_candidates get identical values — the DP now just runs when
     # the audit frame is actually used (guide §1.2: don't compute what
     # the action doesn't need).
-    decided = S.with_audit_levenshtein(decided_narrow)
-    acc = D.accepted(decided_narrow)
+    return {**out,
+            # scored keep-best pairs (post keep_best_per_uprn,
+            # pre-decide): the decision's exact input, exposed so
+            # audits / the linkage_fuzzy oracle can replay decide() from
+            # persisted data, and a resumed phased run can re-decide
+            # without re-scoring
+            "scored_pairs": best,
+            "decisions": decided_narrow,
+            "audit_candidates": S.with_audit_levenshtein(decided_narrow)}
 
-    # --- phase: fan-out to documents + legacy-UPRN overrides
+
+def fan_out(decided: DataFrame, docs_n: DataFrame, uaddr: DataFrame,
+            gazp: DataFrame, pins: Pins) -> dict:
+    """Accepted address matches fanned out to documents, legacy/historic
+    UPRN overrides, and deterministic-first precedence: one row per
+    matched doc."""
+    acc = D.accepted(decided)
     addr_match = acc.select("addr_id", "uprn", "score", "confidence",
                             F.array_join("methods", "+").alias("method"))
     doc_addr = docs_n.join(
@@ -244,19 +269,31 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
     # Explicit priority column, NOT confidence ordering: a perfect
     # fuzzy match also reaches confidence 1.0 and would then beat the
     # UPRN-validated match on the uprn tie-break.
-    from pyspark.sql import Window
     both = (legacy.withColumn("_prio", F.lit(0))
             .unionByName(historic.withColumn("_prio", F.lit(0)))
             .unionByName(fuzzy_doc.withColumn("_prio", F.lit(1))))
     wd = Window.partitionBy("doc_id").orderBy(
         F.asc("_prio"), F.desc("confidence"), F.desc("score"),
         F.asc("uprn"))
-    # feeds CC + consensus + rescue + output
-    doc_matches = pins.checkpoint(
-        both.withColumn("_rn", F.row_number().over(wd))
-        .filter(F.col("_rn") == 1).drop("_rn", "_prio"))
+    return {
+        # feeds CC + consensus + rescue + output
+        "doc_matches": pins.checkpoint(
+            both.withColumn("_rn", F.row_number().over(wd))
+            .filter(F.col("_rn") == 1).drop("_rn", "_prio")),
+        # appendable historic gazetteer rows (migrations/029 analog):
+        # at scale this is the Iceberg append that pre-populates missing
+        # UPRNs before the next run, per cmd/bulk-historic-uprns
+        "historic_gazetteer": C.historic_uprn_records(docs_n, gazp,
+                                                      missing=missing),
+    }
 
-    # --- phase: connected components + consensus corrections + G2 rescue
+
+def cluster_and_resolve(doc_matches: DataFrame, decided: DataFrame,
+                        docs_n: DataFrame, gazp: DataFrame,
+                        cfg: PipelineConfig, pins: Pins) -> dict:
+    """Connected components, consensus corrections, G2 rescue and the
+    optional G3 golden-record corrections, then one match per doc;
+    plus the canonical UPRN per cluster and the decision metrics (A1)."""
     edges = build_edges(doc_matches, docs_n)
     comps = pins.adopt(connected_components(edges))
     consensus = cluster_consensus(comps, doc_matches, docs_n)
@@ -285,7 +322,7 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
     # consensus/rescue only touch previously-unmatched docs, but keep a
     # deterministic one-row-per-doc guarantee regardless
     # min_by with negated confidence/score: ties break toward the MIN
-    # uprn, matching the doc_matches window above and phases.py p5/p6.
+    # uprn, matching fan_out's precedence window.
     # confidence/score coalesced to 0.0 inside the ordering struct —
     # struct NULLs sort smallest, so a NULL-scored row from an
     # allowMissingColumns union would otherwise win keep-best.
@@ -298,48 +335,55 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
                             (-F.coalesce("score", F.lit(0.0))).alias("_s"),
                             F.col("uprn").alias("_u"))).alias("_m"))
                .select("doc_id", "_m.*"))
-    clusters = canonical_uprn_per_cluster(comps, doc_matches)
-
-    # --- outputs: final matched docs with spans preserved (invariant),
-    #     audit candidates, run metrics (A1)
-    result = (docs_n
-              .select("doc_id", "spans", "span_fp", "raw_address",
-                      "addr_can", "postcode", "group_key")
-              .join(matches, "doc_id", "left"))
-    metrics = (decided_narrow.groupBy("decision")
-               .agg(F.count("*").alias("n"),
-                    F.avg("score").alias("avg_score")))
-    out_extra = {}
-    if cfg.auto_tune:
-        out_extra["tuning"] = spark.createDataFrame(
-            [(float(o["threshold"]), int(o["tp"]), int(o["fp"]),
-              int(o["fn"]), float(o["precision"]), float(o["recall"]),
-              float(o["f1"])) for o in tuned["sweep"]],
-            "threshold double, tp long, fp long, fn long, "
-            "precision double, recall double, f1 double")
-        out_extra["thresholds_used"] = thresholds
     return {
-        **out_extra,
-        "docs_normalized": docs_n,
-        "unique_addresses": uaddr,
-        "gazetteer_prepared": gazp,
-        # appendable historic gazetteer rows (migrations/029 analog):
-        # at scale this is the Iceberg append that pre-populates missing
-        # UPRNs before the next run, per cmd/bulk-historic-uprns
-        "historic_gazetteer": C.historic_uprn_records(docs_n, gazp,
-                                                      missing=missing),
-        "candidates": cands,
-        # scored keep-best pairs (post keep_best_per_uprn, pre-decide):
-        # the decision phase's exact input, exposed so audits / the
-        # linkage_fuzzy oracle can replay decide() from persisted data
-        "scored_pairs": best,
-        "audit_candidates": decided,
-        "doc_matches": doc_matches,
+        "matches": matches,
+        "clusters": canonical_uprn_per_cluster(comps, doc_matches),
+        "metrics": (decided.groupBy("decision")
+                    .agg(F.count("*").alias("n"),
+                         F.avg("score").alias("avg_score"))),
         "consensus": consensus,
         "components": comps,
-        "clusters": clusters,
-        "matches": matches,
-        "result": result,
-        "metrics": metrics,
-        "release": pins.release,
     }
+
+
+def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
+                 cfg: PipelineConfig | None = None,
+                 gazp_prepared: DataFrame | None = None) -> dict:
+    """gazp_prepared: an already-prepared (prepare_gazetteer) frame —
+    callers that run the pipeline repeatedly over the same gazetteer
+    (streaming foreachBatch, threshold sweeps) prepare + persist it
+    ONCE and pass it here instead of paying normalization + range
+    expansion per run.
+
+    Every frame shared by several consumers is an eager localCheckpoint,
+    so later phases plan against a LogicalRDD leaf instead of
+    re-analyzing the lineage behind it. Those checkpoints stay pinned
+    until the caller invokes the returned ``release()``, which
+    unpersists every one the run made; a caller's ``gazp_prepared``
+    stays pinned. The returned frames read from that storage, so none
+    of them may be used after ``release()``."""
+    cfg = cfg or PipelineConfig()
+    pins = Pins(docs, gaz, gazp_prepared)
+    # gazetteer prep (original ∪ range-expanded, keys); adopt() also
+    # records prepare_gazetteer's own pre-expansion cut
+    if gazp_prepared is not None:
+        gazp = gazp_prepared
+    else:
+        gazp = pins.checkpoint(pins.adopt(C.prepare_gazetteer(gaz)))
+    out = {"gazetteer_prepared": gazp,
+           **normalize_and_dedup(docs, gazp, cfg, pins)}
+    docs_n, uaddr = out["docs_normalized"], out["unique_addresses"]
+    out.update(generate_candidates(uaddr, gazp, cfg, pins))
+    out.update(score_and_decide(out["candidates"], docs_n, uaddr, gazp,
+                                cfg, pins))
+    decided = out.pop("decisions")
+    out.update(fan_out(decided, docs_n, uaddr, gazp, pins))
+    out.update(cluster_and_resolve(out["doc_matches"], decided, docs_n,
+                                   gazp, cfg, pins))
+    # final matched docs with spans preserved (invariant)
+    out["result"] = (docs_n
+                     .select("doc_id", "spans", "span_fp", "raw_address",
+                             "addr_can", "postcode", "group_key")
+                     .join(out["matches"], "doc_id", "left"))
+    out["release"] = pins.release
+    return out

@@ -113,6 +113,7 @@ def main() -> int:
         export_enhanced(build_fact(result, out["gazetteer_prepared"]),
                         args.export)
         print(f"export written to {args.export}")
+    out["release"]()
     return 0
 
 

@@ -3,16 +3,20 @@ streaming front door."""
 
 import os
 import time
+from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
 
+from ehdc_llpg_address_matching_spark.operators import decision as D
 from ehdc_llpg_address_matching_spark.pipeline import PipelineConfig
 from ehdc_llpg_address_matching_spark.plans.phases import run_phased
 from ehdc_llpg_address_matching_spark.sources.catalog import Warehouse
 from ehdc_llpg_address_matching_spark.streaming.ingest import (
     read_document_stream, start_incremental_linkage, windowed_event_counts)
-from ehdc_llpg_address_matching_spark.synth import SynthConfig, synth_tables
+from ehdc_llpg_address_matching_spark.synth import (SynthConfig,
+                                                    synth_spark_tables,
+                                                    synth_tables)
 
 CFG = PipelineConfig(enable_vector=False, enable_spatial=False,
                      enable_symspell=False)
@@ -20,7 +24,6 @@ CFG = PipelineConfig(enable_vector=False, enable_spatial=False,
 
 @pytest.fixture(scope="module")
 def corpus(spark):
-    from ehdc_llpg_address_matching_spark.synth import synth_spark_tables
     gaz_df, docs_df, gold = synth_spark_tables(
         spark, SynthConfig(seed=5, n_gazetteer=150, n_docs=200))
     return docs_df, gaz_df, gold
@@ -202,9 +205,14 @@ def test_stream_static_candidate_join(spark, tmp_path, corpus):
     assert n_docs_with_cand > 0
 
 
-def test_phased_matches_monolithic_parity(spark, tmp_path, corpus):
+@pytest.mark.parametrize("cfg", [CFG, replace(CFG, auto_tune=True)],
+                         ids=["default", "auto_tune"])
+def test_phased_matches_monolithic_parity(spark, tmp_path, corpus, cfg):
     """The phased runner and the monolithic run_pipeline must emit
-    IDENTICAL doc->uprn assignments, including on exact score ties —
+    IDENTICAL doc->uprn assignments and audit decisions, with and
+    without the threshold auto-tune (the phased p4 once decided with
+    the configured thresholds whatever cfg.auto_tune said), including
+    on exact score ties —
     round-4 fix: p5/p6's keep-best used max_by over (…, uprn) (max
     uprn wins ties) while the monolithic precedence window picks the
     MIN uprn; both now break ties toward the minimum uprn.
@@ -225,6 +233,13 @@ def test_phased_matches_monolithic_parity(spark, tmp_path, corpus):
     from ehdc_llpg_address_matching_spark.synth import (DOCS_SPARK_SCHEMA,
                                                         GAZ_SPARK_SCHEMA)
     docs, gaz, _ = corpus
+    if cfg.auto_tune:
+        # no top-1 pair of the shared corpus scores between the tuned
+        # and the default thresholds, so tuning decides nothing
+        # differently there; G2-rescue street fragments do
+        gaz, docs, _ = synth_spark_tables(
+            spark, SynthConfig(seed=5, n_gazetteer=150, n_docs=200,
+                               rescue_frac=0.15))
     hier_doc = [("DHIER01",
                  [{"kind": "text", "text": "5 ZENNOR RISE",
                    "media_ref": None, "offset": 0}],
@@ -237,8 +252,8 @@ def test_phased_matches_monolithic_parity(spark, tmp_path, corpus):
     gaz = gaz.unionByName(spark.createDataFrame(hier_gaz,
                                                 GAZ_SPARK_SCHEMA))
     wh = Warehouse(spark, str(tmp_path / "wh_parity"))
-    out_p = run_phased(spark, docs, gaz, wh, run_id="rp", cfg=CFG)
-    out_m = run_pipeline(spark, docs, gaz, CFG)
+    out_p = run_phased(spark, docs, gaz, wh, run_id="rp", cfg=cfg)
+    out_m = run_pipeline(spark, docs, gaz, cfg)
     mp = {(r["doc_id"], r["uprn"])
           for r in out_p["matches"].select("doc_id", "uprn").collect()}
     mm = {(r["doc_id"], r["uprn"])
@@ -249,6 +264,16 @@ def test_phased_matches_monolithic_parity(spark, tmp_path, corpus):
     assert ("DHIER01", "999000001") in mm
     assert ("DHIER01", "999000001") in mp
     assert mp == mm
+    audit = lambda dec: {tuple(r) for r in dec.select(
+        "addr_id", "uprn", "decision").collect()}
+    assert audit(out_p["audit_candidates"]) == \
+        audit(out_m["audit_candidates"])
+    if cfg.auto_tune:
+        # the tuned ladder must decide some pair differently, or this
+        # case could not tell a runner that ignores auto_tune apart
+        assert out_m["thresholds_used"].high != D.Thresholds().high
+        assert audit(out_m["audit_candidates"]) != audit(D.decide(
+            out_m["scored_pairs"], D.Thresholds(), cfg.top_k_audit))
 
 
 def test_phased_resume_recomputes_phase_missing_a_table(spark, tmp_path,

@@ -180,6 +180,68 @@ def test_release_keeps_caller_gazetteer(spark):
     assert gazp.count() == n
 
 
+def test_phased_release_drops_every_pin(spark, tmp_path):
+    """run_phased's release() unpersists every checkpoint the run made,
+    inside the phases and of the shared read-backs, and its outputs
+    (warehouse read-backs) still count afterwards."""
+    from ehdc_llpg_address_matching_spark.plans.phases import run_phased
+    from ehdc_llpg_address_matching_spark.sources.catalog import Warehouse
+    cfg = SynthConfig(seed=5, n_gazetteer=80, n_docs=100)
+    gaz, docs, _ = synth_tables(cfg)
+    d, g = spark.createDataFrame(docs), spark.createDataFrame(gaz)
+    rdds0, cached0 = _persistent_rdds(spark), _cache_entries(spark)
+    out = run_phased(spark, d, g, Warehouse(spark, str(tmp_path / "wh")),
+                     run_id="rel", cfg=PipelineConfig(auto_tune=True))
+    n = out["matches"].count()
+    assert n > 0
+    assert _persistent_rdds(spark) - rdds0
+    out["release"]()
+    assert not _persistent_rdds(spark) - rdds0
+    assert _cache_entries(spark) == cached0
+    assert out["matches"].count() == n
+
+
+def test_traced_hooks_fire_in_order(spark, monkeypatch):
+    """perfbench/traced.py times run_pipeline by swapping the functions
+    in its HOOKS on their modules. Every one must still be looked up
+    there at call time, or its layer's span silently vanishes, and the
+    layers must open in HOOKS order, or the spans stop tiling the run."""
+    import importlib
+    import importlib.util
+    import os
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "perfbench", "traced.py")
+    spec = importlib.util.spec_from_file_location("perfbench_traced", path)
+    traced = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(traced)
+    layer_of = {name: layer for _, name, layer, _ in traced.HOOKS}
+    calls = []
+
+    def counted(name, fn):
+        def hook(*args, **kwargs):
+            calls.append(name)
+            return fn(*args, **kwargs)
+        return hook
+
+    for mod, name, _, _ in traced.HOOKS:
+        m = importlib.import_module(f"{traced.PACKAGE}.{mod}")
+        monkeypatch.setattr(m, name, counted(name, getattr(m, name)))
+    gaz, docs, _ = synth_tables(SynthConfig(seed=5, n_gazetteer=80,
+                                            n_docs=100))
+    assert "embedding" in gaz.columns  # so cand_vector runs
+    out = run_pipeline(spark, spark.createDataFrame(docs),
+                       spark.createDataFrame(gaz))
+    assert out["matches"].count() > 0
+    out["release"]()
+    assert set(calls) == set(layer_of)
+
+    def opened(layers):
+        return [l for i, l in enumerate(layers) if i == 0 or l != layers[i - 1]]
+
+    assert opened([layer_of[c] for c in calls]) == \
+        opened([layer for _, _, layer, _ in traced.HOOKS])
+
+
 def test_historic_uprn_length_gate(spark):
     """Digit fragments surviving clean_uprn_series (e.g. '3' from
     'FLAT 3' typed into the UPRN field) must NOT spawn historic
