@@ -633,7 +633,7 @@ def q_ivf_ann_topk(spark, sf):
     from ehdc_llpg_address_matching_spark.operators.ann import ivf_topk
     emb = _t(spark, sf, "embeddings")
     out = ivf_topk(emb.filter(F.col("vec_id") < 20), emb, k=3,
-                   n_cells=8, n_probe=8, dim=64)
+                   n_cells=8, n_probe=8)
     return out.select("query_id", "neighbor_id", "rank")
 
 
@@ -1268,8 +1268,7 @@ def _linkage_vector_fixture(spark) -> dict:
                       "postcode_drop": 0.30, "postcode_unspaced": 0.05,
                       "descriptor": 0.05, "uprn_suffix": 0.05})
     gaz_df, docs_df, _ = synth_spark_tables(spark, cfg)
-    pcfg = PipelineConfig(enable_vector=True, vector_top_k=150,
-                          vector_min_sim=0.70)
+    pcfg = PipelineConfig(enable_vector=True, vector_top_k=150)
     out = run_pipeline(spark, docs_df, gaz_df, pcfg)
     fix = _fix("linkage_vector")
     pc = lambda c: F.coalesce(F.col(c), F.lit("")).alias("postcode")
@@ -1320,9 +1319,9 @@ def q_j9_vector_engine(spark, sf):
     fx = _linkage_vector_fixture(spark)
     out = fx["out"]
     cands = C.cand_vector(out["unique_addresses"],
-                          out["gazetteer_prepared"], embed_dim=0,
+                          out["gazetteer_prepared"],
                           top_k=fx["pcfg"].vector_top_k,
-                          min_sim=fx["pcfg"].vector_min_sim)
+                          min_sim=C.VECTOR_MIN_SIM)
     return (cands.select("addr_id", "uprn",
                          F.round("vec_sim", 4).alias("vec_sim"))
             .orderBy("addr_id", "uprn"))

@@ -19,8 +19,7 @@ import re
 
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, StringType, StructField,
-                               StructType)
+from pyspark.sql.types import StringType, StructField, StructType
 
 # UK postcode (reference: internal/normalize/address.go:75)
 POSTCODE_RE = r"\b([A-Z]{1,2}[0-9][0-9A-Z]?)\s*([0-9][ABD-HJLNP-UW-Z]{2})\b"
@@ -168,14 +167,16 @@ def canonicalize_series(raw: pd.Series) -> pd.DataFrame:
 
 
 def tokens_series(addr_can: pd.Series) -> pd.Series:
-    """Matching token set: split, drop stop tokens and len<2."""
+    """Matching token set: split, drop stop tokens and len<2. The pandas
+    reference for with_normalized's Catalyst `tokens` column."""
     return addr_can.str.split().map(
         lambda ts: [t for t in ts if len(t) >= 2 and t not in STOP_TOKENS]
         if isinstance(ts, list) else [])
 
 
 def house_numbers_series(addr_can: pd.Series) -> pd.Series:
-    """All house-number tokens (reference: address.go:78-81,219-236)."""
+    """All house-number tokens (reference: address.go:78-81,219-236).
+    The pandas reference for with_normalized's `house_numbers` column."""
     return addr_can.str.findall(HOUSE_NUM_RE)
 
 
@@ -283,7 +284,8 @@ def parse_components_series(raw: pd.Series) -> pd.DataFrame:
 
 def is_vague_series(addr: pd.Series) -> pd.Series:
     """Vague-address gate (N10; reference: internal/validation/parser.go:338-377):
-    descriptor-led addresses are unsuitable for auto-accept."""
+    descriptor-led addresses are unsuitable for auto-accept. The pandas
+    reference for with_normalized's `is_vague` column."""
     return addr.fillna("").str.upper().str.contains(DESCRIPTOR_RE, regex=True)
 
 
@@ -295,85 +297,15 @@ CANON_SCHEMA = StructType([
     StructField("addr_core", StringType()),
 ])
 
-COMPONENTS_SCHEMA = StructType([
-    StructField("house_number", StringType()),
-    StructField("street", StringType()),
-    StructField("locality", StringType()),
-    StructField("postcode", StringType()),
-    StructField("parse_confidence", StringType()),
-    StructField("parse_valid", StringType()),
-])
-
-
-def with_canonical(df, raw_col: str = "raw_address"):
-    """documents + (addr_can, postcode, addr_core, tokens, house_numbers).
-
-    Column-expression implementations where Catalyst can codegen them
-    (postcode regex, house numbers), pandas UDF for the full canonical
-    chain (abbreviation table too big to inline as regexp_replace chain
-    without bloating the plan — one Arrow batch pass instead)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(CANON_SCHEMA)
-    def _canon(raw: pd.Series) -> pd.DataFrame:
-        return canonicalize_series(raw)
-
-    df = df.withColumn("_c", _canon(F.col(raw_col)))
-    df = df.select("*", "_c.addr_can", "_c.postcode", "_c.addr_core").drop("_c")
-    df = df.withColumn(
-        "tokens",
-        F.filter(
-            F.split(F.col("addr_core"), " "),
-            lambda t: (F.length(t) >= 2) & ~t.isin(*STOP_TOKENS)))
-    df = df.withColumn(
-        "house_numbers",
-        F.expr(r"regexp_extract_all(addr_core, '\\b(\\d+[A-Z]?)\\b', 1)"))
-    df = df.withColumn("is_vague", F.col("addr_can").rlike(DESCRIPTOR_RE))
-    return df
-
-
-def with_components(df, raw_col: str = "raw_address"):
-    from pyspark.sql.functions import pandas_udf
-
-    schema = StructType([
-        StructField("house_number", StringType()),
-        StructField("street", StringType()),
-        StructField("locality", StringType()),
-        StructField("name", StringType()),
-        StructField("pc", StringType()),
-        StructField("parse_confidence", StringType()),
-        StructField("parse_valid", StringType()),
-    ])
-
-    @pandas_udf(schema)
-    def _parse(raw: pd.Series) -> pd.DataFrame:
-        out = parse_components_series(raw)
-        out = out.rename(columns={"postcode": "pc"})
-        out["parse_confidence"] = out["parse_confidence"].astype(str)
-        out["parse_valid"] = out["parse_valid"].astype(str)
-        return out
-
-    df = df.withColumn("_p", _parse(F.col(raw_col)))
-    return (df
-            .withColumn("c_house", F.col("_p.house_number"))
-            .withColumn("c_street", F.col("_p.street"))
-            .withColumn("c_locality", F.col("_p.locality"))
-            .withColumn("c_name", F.col("_p.name"))
-            .withColumn("c_postcode", F.col("_p.pc"))
-            .withColumn("parse_confidence", F.col("_p.parse_confidence").cast("double"))
-            .withColumn("parse_valid", F.col("_p.parse_valid") == "True")
-            .drop("_p"))
-
 
 def _normalize_all_frame(raw: pd.Series, raw_uprn: pd.Series | None,
                          symspell=None) -> pd.DataFrame:
     """Pandas body of the fused normalization UDF (with_normalized):
     canonicalize + component parse (+ optional UPRN clean + SymSpell
-    correction) + street phonetic in ONE pass over the batch. The
+    correction) + street phonetic in ONE pass over the batch — the
     literal composition of canonicalize_series / parse_components_series
     / clean_uprn_series / SymSpell.correct_tokens_series /
-    phonetic_series — unit tests pin bit-equality against the unfused
-    chain."""
+    phonetic_series."""
     from .phonetic import phonetic_series
     c = canonicalize_series(raw)
     p = parse_components_series(raw)
@@ -404,18 +336,17 @@ def _normalize_all_frame(raw: pd.Series, raw_uprn: pd.Series | None,
 def with_normalized(df, raw_col: str = "raw_address",
                     uprn_col: str | None = None, symspell=None):
     """Fused N1+N2+N9(+N11+N12) normalization: ONE ArrowEvalPython node
-    where the unfused chain (with_canonical -> with_components ->
-    [_clean_uprn] -> [symspell _correct x2] -> with_street_phonetic)
-    paid up to three Python eval nodes and round-tripped the
-    intermediate strings JVM->Python->JVM->Python (optimization guide
-    §4.1/§4.2: cross the boundary once, ship only the columns the
-    kernel needs — here just raw_col [+ uprn_col]).
+    runs canonicalize + component parse (+ UPRN clean + SymSpell
+    correction) + street phonetic, so the strings cross the JVM->Python
+    boundary once and only raw_col [+ uprn_col] is shipped
+    (optimization guide §4.1/§4.2).
 
-    Column-for-column identical to the unfused chain: the JVM-expression
-    columns (tokens, house_numbers, is_vague) are the same Catalyst
-    expressions over the same pre-correction strings, and the pandas
-    body is the literal composition of the unfused series kernels
-    (pinned by tests/test_r06_optimizations.py)."""
+    tokens, house_numbers and is_vague are Catalyst expressions over the
+    pre-correction addr_core / addr_can, equal to tokens_series /
+    house_numbers_series / is_vague_series; the pandas body is the
+    composition of the series kernels (_normalize_all_frame). Both are
+    pinned against those kernels by tests/test_r06_optimizations.py.
+    The corrected core then replaces addr_core in place."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import BooleanType, DoubleType
 
@@ -455,8 +386,8 @@ def with_normalized(df, raw_col: str = "raw_address",
     d = df.withColumn("_n", ncol)
     d = d.select("*", "_n.addr_can", "_n.postcode",
                  F.col("_n.addr_core_pre").alias("addr_core"))
-    # same Catalyst expressions as with_canonical, over the same
-    # pre-correction core string
+    # Catalyst forms of tokens_series / house_numbers_series /
+    # is_vague_series, over the pre-correction core string
     d = d.withColumn(
         "tokens",
         F.filter(
@@ -475,8 +406,7 @@ def with_normalized(df, raw_col: str = "raw_address",
           .withColumn("parse_valid", F.col("_n.parse_valid")))
     if uprn_col:
         d = d.withColumn("uprn_clean", F.col("_n.uprn_clean"))
-    # corrected core replaces the pre-correction string IN PLACE (same
-    # column position as the unfused chain's in-place correction)
+    # corrected core replaces the pre-correction string in place
     d = (d.withColumn("addr_core", F.col("_n.addr_core_corr"))
           .withColumn("street_phonetic", F.col("_n.street_phonetic")))
     return d.drop("_n")

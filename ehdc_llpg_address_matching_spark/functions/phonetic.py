@@ -14,8 +14,6 @@ whole batch is processed without per-row Python.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 _DIGRAPHS = [
     ("PH", "F"), ("GH", "F"), ("KN", "N"), ("GN", "N"), ("WR", "R"),
@@ -48,16 +46,3 @@ def phonetic_code(word: str) -> str:
     """Scalar convenience for tests."""
     return phonetic_series(pd.Series([word])).iloc[0]
 
-
-def with_street_phonetic(df, street_col: str = "c_street",
-                         out_col: str = "street_phonetic"):
-    """Phonetic code of the street's distinctive first word — the
-    blocking key. 'HIGH STREET' -> code('HIGH')."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(StringType())
-    def _ph(street: pd.Series) -> pd.Series:
-        first = street.fillna("").str.split().str[0].fillna("")
-        return phonetic_series(first)
-
-    return df.withColumn(out_col, _ph(F.col(street_col)))

@@ -297,11 +297,3 @@ def token_overlap_batch(a_tokens, b_tokens) -> np.ndarray:
         out[i] = len(sa & sb) / min(len(sa), len(sb))
     return out
 
-
-def cosine_batch(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Row-wise cosine of two (n, d) float matrices, clamped to [0, 1]
-    via (dot+1)/2 like the reference (internal/engine/vector_db.go:171-193)."""
-    na = np.linalg.norm(a, axis=1)
-    nb = np.linalg.norm(b, axis=1)
-    dot = (a * b).sum(axis=1) / np.maximum(na * nb, 1e-12)
-    return np.clip((dot + 1.0) / 2.0, 0.0, 1.0)

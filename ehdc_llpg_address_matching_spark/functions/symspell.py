@@ -19,7 +19,6 @@ import pandas as pd
 MAX_EDIT = 2
 PREFIX_LEN = 7
 MIN_TERM_LEN = 4
-_SKIP_CORRECTION = None  # set below (street suffixes; numbers handled inline)
 
 
 def _deletes(word: str, max_edit: int) -> set[str]:

@@ -81,7 +81,7 @@ def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
 
 def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
              id_col: str = "vec_id", vec_col: str = "embedding",
-             n_cells: int = 16, n_probe: int = 4, dim: int | None = None,
+             n_cells: int = 16, n_probe: int = 4,
              seed: int = 13, sample_rows: int = 50_000,
              exclude_self: bool = True) -> DataFrame:
     """IVF (inverted-file) ANN: k-means coarse quantizer -> corpus
@@ -97,8 +97,6 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
     import numpy as np
 
     spark = queries.sparkSession
-    # (dim is accepted for API symmetry with lsh_topk but DEPRECATED /
-    # unused: the centroid training sample fixes the dimensionality.)
     # --- train the coarse quantizer on a deterministic sample.
     # Hash-ordered top-k, NOT count()+sample()+limit(): the old shape
     # paid a full eager count() pass over the corpus at plan-build time

@@ -22,7 +22,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-BLOCK_KEY_KINDS = ("pc_sector", "phon_loc", "tok_prefix")
 
 
 def with_blocking_keys(df: DataFrame,

@@ -31,6 +31,11 @@ from .blocking import explode_keys, salt_hot_keys, with_blocking_keys
 # to 51 inclusive house numbers ('47-93' passes, '47-98' does not)
 MAX_RANGE_UNITS = 50
 
+# J9 keep-gate: a vector candidate survives when its (dot+1)/2 similarity
+# is >= this, i.e. cosine >= 2*VECTOR_MIN_SIM - 1. The j9 oracle fixture
+# reads it too, so the engine and its oracle share one value.
+VECTOR_MIN_SIM = 0.70
+
 
 def expand_ranges(gazp: DataFrame) -> DataFrame:
     """Gazetteer densification (J10; reference:
@@ -629,8 +634,8 @@ def cand_hierarchical(uaddr: DataFrame, gazp: DataFrame,
                     "method_conf"))
 
 
-def cand_vector(uaddr: DataFrame, gazp: DataFrame, embed_dim: int,
-                top_k: int = 10, min_sim: float = 0.70) -> DataFrame:
+def cand_vector(uaddr: DataFrame, gazp: DataFrame, top_k: int = 10,
+                min_sim: float = VECTOR_MIN_SIM) -> DataFrame:
     """J9: embedding ANN without a vector service. The gazetteer
     embedding matrix (n x d float32) is collected once and BROADCAST;
     each Arrow batch of addresses is hash-embedded and scored against
@@ -683,9 +688,8 @@ def cand_vector(uaddr: DataFrame, gazp: DataFrame, embed_dim: int,
 
 
 def cand_vector_ivf(uaddr: DataFrame, gazp: DataFrame,
-                    top_k: int = 10, min_sim: float = 0.70,
-                    n_cells: int = 64, n_probe: int = 8,
-                    embed_dim: int = 0) -> DataFrame:
+                    top_k: int = 10, min_sim: float = VECTOR_MIN_SIM,
+                    n_cells: int = 64, n_probe: int = 8) -> DataFrame:
     """J9 at gazetteer scales where broadcast is impossible: a 10^8-row
     x 384-dim float32 gazetteer matrix is ~150 GB — cand_vector's
     collect-and-broadcast GEMM (the right plan for the reference's
@@ -695,27 +699,25 @@ def cand_vector_ivf(uaddr: DataFrame, gazp: DataFrame,
     sample, the gazetteer is bucketed by nearest centroid in one
     map-only pass, each address probes its n_probe nearest cells, and
     the only shuffle is the equi-join on the short cell id. Recall is
-    tunable via n_probe (n_probe = n_cells degenerates to exact).
+    tunable via n_probe (n_probe = n_cells degenerates to exact). The
+    addresses are hash-embedded at the width of the gazetteer's
+    embeddings, read from one row — O(1) at any corpus scale, not the
+    whole-matrix collect this path exists to avoid.
 
-    Returns (addr_id, uprn, vec_sim, method='vector') — same contract
-    and the reference's (dot+1)/2 similarity convention as
-    cand_vector, so the two are drop-in alternatives behind
-    PipelineConfig.vector_mode."""
+    Returns (addr_id, uprn, vec_sim, method='vector') — same contract,
+    keep-gate and (dot+1)/2 similarity convention as cand_vector, so
+    the two are drop-in alternatives behind PipelineConfig.vector_mode."""
     from .ann import ivf_topk
     from ..functions.embed import hash_embed_batch
 
-    if embed_dim <= 0:
-        # one-row schema probe of the corpus embedding width — O(1)
-        # at any corpus scale (not the whole-matrix collect this
-        # path exists to avoid)
-        embed_dim = len(gazp.select("embedding").first()[0])
+    dim = len(gazp.select("embedding").first()[0])
 
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, FloatType
 
     @pandas_udf(ArrayType(FloatType()))
     def _embed(texts: pd.Series) -> pd.Series:
-        m = hash_embed_batch(texts, embed_dim)
+        m = hash_embed_batch(texts, dim)
         return pd.Series([row.tolist() for row in m])
 
     q = uaddr.select(F.col("addr_id").alias("vec_id"),

@@ -20,15 +20,6 @@ from pyspark.sql import DataFrame, Window, functions as F
 from ..session import release_checkpoint
 
 
-def _canonical_edges(edges: DataFrame) -> DataFrame:
-    """Undirected edge list -> (a<b) canonical, distinct, no loops."""
-    return (edges
-            .select(F.least("src", "dst").alias("a"),
-                    F.greatest("src", "dst").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct())
-
-
 def _large_star(e: DataFrame) -> DataFrame:
     """Connect every strictly-larger neighbor of u to min(N(u) ∪ {u})."""
     sym = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(

@@ -22,7 +22,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import ArrayType, LongType
 
-MERSENNE = (1 << 61) - 1
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text",

@@ -13,11 +13,11 @@ production the whole phase is HARD-DISABLED (main.go:1651-1656:
 This module reproduces the complete Spark-side machinery — golden-
 record election, candidate selection, batched mapInPandas fan-out,
 the prompt contract and the SAME|0.85 verdict parser — with the LLM
-client itself pluggable (`llm_fn`). It is DISABLED by default
-(`PipelineConfig.enable_llm_golden=False`), for the reference's own
-documented reason; enabling it without injecting a client raises, the
-same gate as the optional-PIL pixel decode. No network client ships
-here: in a deployment `llm_fn` wraps whatever serving endpoint is
+client itself pluggable (`llm_fn`). The pipeline runs the phase iff
+`PipelineConfig.llm_fn` is set, so it is OFF by default, for the
+reference's own documented reason; calling
+llm_golden_record_corrections without a client raises. No network
+client ships here: in a deployment `llm_fn` wraps whatever serving endpoint is
 available; in tests it is a deterministic fake.
 
 Scale shape: golden election is two narrow groupBys on (group_key);
@@ -155,8 +155,8 @@ def llm_golden_record_corrections(
     residue streams through executors and each partition issues
     bounded batch calls instead of one HTTP round-trip per row).
     Required: this operator has no default model. The reference ships
-    this phase hard-disabled (main.go:1651-1656) — callers get it only
-    by explicitly enabling AND injecting a client.
+    this phase hard-disabled (main.go:1651-1656) — the pipeline runs it
+    only when PipelineConfig.llm_fn injects a client.
 
     Returns (doc_id, uprn, confidence, method='llm_golden')."""
     if llm_fn is None:

@@ -108,27 +108,20 @@ def attach_pair_attrs(cands: DataFrame, uaddr: DataFrame,
 
 
 def with_pair_features(pairs: DataFrame) -> DataFrame:
-    """Hot-path pair features. Trigram + street similarity are PURE
-    JVM: per-side hashed 3-gram arrays (trigram_grams_expr, computed
-    once per side row in attach_pair_attrs; re-derived here if a
-    caller feeds a narrow pair table without them) intersected with
-    whole-stage-codegen set ops. The Arrow UDF carries only Jaro
-    (char DP) and token-frequency cosine (F4, reference:
-    internal/match/features.go:184-228), and both are gated on the
-    JVM trigram clearing JARO_GATE — below it the pair can't reach
-    the decision floor, so no Python runs at all for hopeless pairs.
-    locality_sim is finalized here because its token fallback is the
-    tf-cosine."""
+    """Hot-path pair features, over attach_pair_attrs ->
+    with_column_features output. Trigram + street similarity are PURE
+    JVM: the per-side hashed 3-gram arrays attach_pair_attrs computes
+    once per side row, intersected with whole-stage-codegen set ops.
+    The Arrow UDF carries only Jaro (char DP) and token-frequency
+    cosine (F4, reference: internal/match/features.go:184-228), and
+    both are gated on the JVM trigram clearing JARO_GATE — below it
+    the pair can't reach the decision floor, so no Python runs at all
+    for hopeless pairs. locality_sim is finalized here because its
+    token fallback is the tf-cosine."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     from ..functions.similarity import token_cosine_batch
-
-    for grams, src in (("d_grams", "d_core"), ("g_grams", "g_core"),
-                       ("d_street_grams", "d_street"),
-                       ("g_street_grams", "g_street")):
-        if grams not in pairs.columns:
-            pairs = pairs.withColumn(grams, trigram_grams_expr(F.col(src)))
 
     pairs = (pairs
              .withColumn("trgm", trigram_sim_expr(F.col("d_grams"),
@@ -151,13 +144,12 @@ def with_pair_features(pairs: DataFrame) -> DataFrame:
 
     pairs = pairs.withColumn(
         "_f", _feat("trgm", "d_core", "g_core", "d_tokens", "g_tokens"))
-    loc_base = (F.col("locality_sim") if "locality_sim" in pairs.columns
-                else F.lit(0.0))
     return (pairs
             .withColumn("jaro", F.col("_f.jaro"))
             .withColumn("tok_cos", F.col("_f.tok_cos"))
             .withColumn("locality_sim",
-                        F.greatest(loc_base, F.col("_f.tok_cos") * F.lit(0.5)))
+                        F.greatest("locality_sim",
+                                   F.col("_f.tok_cos") * F.lit(0.5)))
             .drop("_f", "d_grams", "g_grams",
                   "d_street_grams", "g_street_grams"))
 
@@ -193,7 +185,8 @@ def with_audit_levenshtein(pairs: DataFrame) -> DataFrame:
 
 
 def with_column_features(pairs: DataFrame) -> DataFrame:
-    """F6-F11: pure column expressions (whole-stage codegen)."""
+    """F6-F11: pure column expressions (whole-stage codegen), over
+    attach_pair_attrs output and before with_pair_features."""
     for c in ("d_name", "d_usrn", "g_usrn", "g_blpu"):
         if c not in pairs.columns:
             pairs = pairs.withColumn(c, F.lit(None).cast("string"))
@@ -211,8 +204,6 @@ def with_column_features(pairs: DataFrame) -> DataFrame:
         F.greatest(F.least(F.size(F.split("d_locality", " ")),
                            F.size(F.split("g_locality", " "))), F.lit(1))
     ).otherwise(F.lit(0.0))
-# tok fallback for locality_sim comes from the tf-cosine (F4) in
-    # with_pair_features; here only the pure column-algebra part
     dist = F.sqrt((F.col("d_e") - F.col("g_e")) ** 2 +
                   (F.col("d_n") - F.col("g_n")) ** 2)
     spatial_boost = F.when(
@@ -230,12 +221,8 @@ def with_column_features(pairs: DataFrame) -> DataFrame:
             .withColumn("house_conflict",
                         F.coalesce(both_house & ~same_house_exact &
                                    ~F.col("house_match"), F.lit(False)))
-            # order-independent vs with_pair_features: keep the tf-cosine
-            # fallback if it was already applied
-            .withColumn("locality_sim", F.greatest(
-                F.coalesce(loc_overlap, F.lit(0.0)),
-                F.col("locality_sim") if "locality_sim" in pairs.columns
-                else F.lit(0.0)))
+            # with_pair_features raises it to the tf-cosine fallback
+            .withColumn("locality_sim", F.coalesce(loc_overlap, F.lit(0.0)))
             .withColumn("phonetic_hit",
                         F.coalesce((F.col("d_phon") != "") &
                                    (F.col("d_phon") == F.col("g_phon")),

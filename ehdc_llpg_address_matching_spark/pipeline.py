@@ -54,9 +54,7 @@ class PipelineConfig:
     # deciding (reference threshold tuner,
     # internal/engine/threshold_tuner.go:37-271)
     auto_tune: bool = False
-    spatial_radius_m: float = 100.0
     vector_top_k: int = 10
-    vector_min_sim: float = 0.70
     # 'broadcast': collect-and-broadcast GEMM (right for reference-size
     # 72K-row gazetteers). 'ivf': coarse-quantizer path for gazetteers
     # whose embedding matrix can't be broadcast (10^8 rows) — same
@@ -67,16 +65,12 @@ class PipelineConfig:
     enable_vector: bool = True
     enable_spatial: bool = True
     enable_symspell: bool = True
-    # G3 LLM golden-record corrections: OFF by default — the reference
-    # hard-disables the phase in production ("LLM corrections degrade
-    # data quality", cmd/matcher-v2/main.go:1651-1656). Enabling also
-    # requires injecting llm_fn (operators/golden.py); no model client
-    # is bundled.
-    enable_llm_golden: bool = False
+    # G3 LLM golden-record corrections run iff an llm_fn is injected
+    # (operators/golden.py); no model client is bundled, so the phase
+    # is OFF by default — the reference hard-disables it in production
+    # ("LLM corrections degrade data quality",
+    # cmd/matcher-v2/main.go:1651-1656).
     llm_fn: object = None
-    hot_key_threshold: int = 2000
-    n_salt: int = 8
-    top_k_audit: int = 10
 
 
 def normalize_documents(docs: DataFrame, symspell: SymSpell | None) -> DataFrame:
@@ -91,8 +85,7 @@ def normalize_documents(docs: DataFrame, symspell: SymSpell | None) -> DataFrame
     d = with_raw_address(d)
     d = d.withColumn("span_fp", span_fingerprint())
     # fused single-ArrowEvalPython normalization (canonicalize + parse
-    # + UPRN clean + SymSpell correction + phonetic) — column-for-column
-    # identical to the old three-Python-node chain, guide §4.1/§4.2
+    # + UPRN clean + SymSpell correction + phonetic), guide §4.1/§4.2
     return with_normalized(d, raw_col="raw_address", uprn_col="raw_uprn",
                            symspell=symspell)
 
@@ -119,24 +112,20 @@ def generate_candidates(uaddr: DataFrame, gazp: DataFrame,
     """The candidate union over every enabled generator."""
     gens = [
         C.cand_exact_canonical(uaddr, gazp),
-        C.cand_blocked(uaddr, gazp, hot_threshold=cfg.hot_key_threshold,
-                       n_salt=cfg.n_salt),
+        C.cand_blocked(uaddr, gazp),
         C.cand_rule_rewrite(uaddr, gazp),
         C.cand_component_joins(uaddr, gazp),
     ]
     if cfg.enable_spatial:
-        gens.append(C.cand_spatial(uaddr, gazp, radius_m=cfg.spatial_radius_m))
+        gens.append(C.cand_spatial(uaddr, gazp))
     if cfg.enable_vector and "embedding" in gazp.columns:
         if cfg.vector_mode == "ivf":
             gens.append(C.cand_vector_ivf(uaddr, gazp,
                                           top_k=cfg.vector_top_k,
-                                          min_sim=cfg.vector_min_sim,
                                           n_cells=cfg.ivf_cells,
                                           n_probe=cfg.ivf_probe))
         else:
-            gens.append(C.cand_vector(uaddr, gazp, embed_dim=0,
-                                      top_k=cfg.vector_top_k,
-                                      min_sim=cfg.vector_min_sim))
+            gens.append(C.cand_vector(uaddr, gazp, top_k=cfg.vector_top_k))
     # J5 hierarchical cascade last: a doc matchable ONLY via the
     # phonetic/locality levels (no postcode, trigram-block-defeating
     # typo) has no other generator
@@ -216,8 +205,7 @@ def score_and_decide(cands: DataFrame, docs_n: DataFrame, uaddr: DataFrame,
             "threshold double, tp long, fp long, fn long, "
             "precision double, recall double, f1 double")
         out["thresholds_used"] = thresholds
-    decided_narrow = pins.checkpoint(
-        D.decide(best, thresholds, top_k=cfg.top_k_audit))
+    decided_narrow = pins.checkpoint(D.decide(best, thresholds))
     # audit-only Levenshtein (F3) stays LAZY, layered over the
     # checkpointed decision table: the matches path never reads `lev`,
     # and computing the batch DP eagerly inside the checkpoint cost ~5 s
@@ -304,7 +292,7 @@ def cluster_and_resolve(doc_matches: DataFrame, decided: DataFrame,
         allowMissingColumns=True).unionByName(
         rescue.withColumn("score", F.col("confidence")),
         allowMissingColumns=True)
-    if cfg.enable_llm_golden:
+    if cfg.llm_fn is not None:
         # G3 (reference applyGroupLLMMatching, main.go:1992-2213; the
         # phase the reference ships hard-disabled). Docs already
         # corrected by consensus/rescue are excluded — the reference's

@@ -114,6 +114,3 @@ def media_spans(docs: DataFrame) -> DataFrame:
                     F.col("s.media_ref").alias("media_ref"),
                     F.col("s.offset").alias("offset")))
 
-
-def load_documents(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path)

@@ -464,9 +464,6 @@ def synth_spark_tables(spark, cfg: SynthConfig | None = None):
     return gaz_df, docs_df, gold
 
 
-DOCS_ARROW_SCHEMA = None  # built lazily (pyarrow import)
-
-
 def _docs_arrow_schema():
     """Explicit arrow schema so the spans offset is int32, matching the
     BASELINE.json contract (pandas would infer int64)."""

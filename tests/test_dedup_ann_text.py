@@ -126,8 +126,8 @@ def test_lsh_bucket_pairs_matches_numpy_reference(vectors):
 def test_ivf_topk_exact_when_probing_all(vectors):
     """n_probe = n_cells degenerates to brute force: identical output."""
     exact = ann.brute_force_topk(vectors, vectors, k=3).toPandas()
-    ivf = ann.ivf_topk(vectors, vectors, k=3, n_cells=4, n_probe=4,
-                       dim=16).toPandas()
+    ivf = ann.ivf_topk(vectors, vectors, k=3, n_cells=4,
+                       n_probe=4).toPandas()
     key = lambda df: sorted(map(tuple, df[["query_id", "neighbor_id",
                                            "rank"]].to_numpy()))
     assert key(ivf) == key(exact)
@@ -135,8 +135,8 @@ def test_ivf_topk_exact_when_probing_all(vectors):
 
 def test_ivf_topk_approximate_recall(vectors):
     """The near-copy pair must land in the same cell (top-1 recall)."""
-    out = ann.ivf_topk(vectors, vectors, k=3, n_cells=4, n_probe=2,
-                       dim=16).toPandas()
+    out = ann.ivf_topk(vectors, vectors, k=3, n_cells=4,
+                       n_probe=2).toPandas()
     hits = out[(out.query_id == 100) & (out["rank"] == 1)]
     assert len(hits) == 1 and hits.iloc[0].neighbor_id == 0
 

@@ -107,11 +107,10 @@ def test_llm_requires_injected_client(spark):
 
 
 def test_pipeline_gate_default_off():
-    # the config gate mirrors the reference's hard-disable: default
-    # construction must NOT enable the LLM phase or require a client
+    # the config gate mirrors the reference's hard-disable: G3 runs iff
+    # a client is injected, and default construction injects none
     from ehdc_llpg_address_matching_spark.pipeline import PipelineConfig
-    cfg = PipelineConfig()
-    assert cfg.enable_llm_golden is False and cfg.llm_fn is None
+    assert PipelineConfig().llm_fn is None
 
 
 def _g3_corpus(spark):
@@ -158,7 +157,7 @@ def _g3_corpus(spark):
 
 
 def test_g3_end_to_end_monolithic_and_phased_parity(spark, tmp_path):
-    """G3 through BOTH runners: with enable_llm_golden on, run_pipeline
+    """G3 through BOTH runners: with an llm_fn injected, run_pipeline
     and run_phased must emit IDENTICAL assignments INCLUDING the LLM
     correction — the phased runner silently dropping a cfg-enabled
     phase is the round-4 J5 bug class (this time for G3)."""
@@ -180,8 +179,7 @@ def test_g3_end_to_end_monolithic_and_phased_parity(spark, tmp_path):
 
     docs, gaz = _g3_corpus(spark)
     cfg = PipelineConfig(enable_vector=False, enable_spatial=False,
-                         enable_symspell=False,
-                         enable_llm_golden=True, llm_fn=_token_overlap_llm)
+                         enable_symspell=False, llm_fn=_token_overlap_llm)
     out_m = run_pipeline(spark, docs, gaz, cfg)
     mm = {(r["doc_id"], r["uprn"], r["method"])
           for r in out_m["matches"].collect()}

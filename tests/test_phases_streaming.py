@@ -205,14 +205,18 @@ def test_stream_static_candidate_join(spark, tmp_path, corpus):
     assert n_docs_with_cand > 0
 
 
-@pytest.mark.parametrize("cfg", [CFG, replace(CFG, auto_tune=True)],
-                         ids=["default", "auto_tune"])
+@pytest.mark.parametrize(
+    "cfg",
+    [CFG, replace(CFG, auto_tune=True), PipelineConfig(),
+     replace(CFG, scorer="spec", thresholds=D.Thresholds.spec_tiers())],
+    ids=["default", "auto_tune", "all_generators", "spec"])
 def test_phased_matches_monolithic_parity(spark, tmp_path, corpus, cfg):
     """The phased runner and the monolithic run_pipeline must emit
     IDENTICAL doc->uprn assignments and audit decisions, with and
     without the threshold auto-tune (the phased p4 once decided with
-    the configured thresholds whatever cfg.auto_tune said), including
-    on exact score ties —
+    the configured thresholds whatever cfg.auto_tune said), with
+    SymSpell and the spatial and vector generators on, under the spec
+    scorer, and on exact score ties —
     round-4 fix: p5/p6's keep-best used max_by over (…, uprn) (max
     uprn wins ties) while the monolithic precedence window picks the
     MIN uprn; both now break ties toward the minimum uprn.
@@ -226,11 +230,17 @@ def test_phased_matches_monolithic_parity(spark, tmp_path, corpus, cfg):
     'SNR|ROPL', defeating the trigram block), tok_prefix
     'RISE_ZENNOR' vs gazetteer 'RISE_ROPLEY' (defeats the token
     block), and the gazetteer twin carries a locality so
-    exact-canonical misses too — verified empirically: the union of
-    all non-hier generators yields ZERO candidates for this address,
-    while the J5 cascade matches it at street+house level (0.90)."""
+    exact-canonical misses too — verified empirically: with the vector
+    generator off, the union of all non-hier generators yields ZERO
+    candidates for this address, while the J5 cascade matches it at
+    street+house level (0.90)."""
+    import pandas as pd
+
+    from ehdc_llpg_address_matching_spark.functions.embed import \
+        hash_embed_batch
     from ehdc_llpg_address_matching_spark.pipeline import run_pipeline
     from ehdc_llpg_address_matching_spark.synth import (DOCS_SPARK_SCHEMA,
+                                                        EMBED_DIM_DEFAULT,
                                                         GAZ_SPARK_SCHEMA)
     docs, gaz, _ = corpus
     if cfg.auto_tune:
@@ -244,9 +254,12 @@ def test_phased_matches_monolithic_parity(spark, tmp_path, corpus, cfg):
                  [{"kind": "text", "text": "5 ZENNOR RISE",
                    "media_ref": None, "offset": 0}],
                  None, None, None, "APP/HIER/00001")]
+    # the vector generator needs an embedding on every gazetteer row
+    emb = [float(x) for x in hash_embed_batch(
+        pd.Series(["5 ZENNOR RISE ROPLEY GU99 9ZZ"]), EMBED_DIM_DEFAULT)[0]]
     hier_gaz = [("999000001", "5 ZENNOR RISE ROPLEY GU99 9ZZ", "5",
                  "ZENNOR RISE", "ROPLEY", "GU99 9ZZ", None, "RD",
-                 "1", True, None, None, None)]
+                 "1", True, None, None, emb)]
     docs = docs.unionByName(spark.createDataFrame(hier_doc,
                                                   DOCS_SPARK_SCHEMA))
     gaz = gaz.unionByName(spark.createDataFrame(hier_gaz,
@@ -273,7 +286,7 @@ def test_phased_matches_monolithic_parity(spark, tmp_path, corpus, cfg):
         # case could not tell a runner that ignores auto_tune apart
         assert out_m["thresholds_used"].high != D.Thresholds().high
         assert audit(out_m["audit_candidates"]) != audit(D.decide(
-            out_m["scored_pairs"], D.Thresholds(), cfg.top_k_audit))
+            out_m["scored_pairs"], D.Thresholds()))
 
 
 def test_phased_resume_recomputes_phase_missing_a_table(spark, tmp_path,

@@ -201,16 +201,21 @@ def test_hierarchical_probe_fetch_mid_levels(spark):
 
 def test_with_normalized_matches_unfused_chain(spark):
     """The fused single-ArrowEvalPython normalization (with_normalized)
-    must be column-for-column identical to the unfused chain
-    (with_canonical -> with_components -> clean_uprn -> symspell
-    corrections -> with_street_phonetic) — including the in-place
-    SymSpell-corrected addr_core/c_street, the pre-correction
-    tokens/house_numbers, and the phonetic of the CORRECTED street."""
+    must be column-for-column identical to the unfused chain of pandas
+    kernels (canonicalize_series, parse_components_series,
+    clean_uprn_series, SymSpell corrections, phonetic_series, and
+    tokens_series / house_numbers_series / is_vague_series for the
+    Catalyst columns) — including the in-place SymSpell-corrected
+    addr_core/c_street, the pre-correction tokens/house_numbers, and
+    the phonetic of the CORRECTED street."""
+    import numpy as np
+
     from ehdc_llpg_address_matching_spark.functions.normalize import (
-        STREET_SUFFIX_WORDS, clean_uprn_series, with_canonical,
-        with_components, with_normalized)
+        STREET_SUFFIX_WORDS, canonicalize_series, clean_uprn_series,
+        house_numbers_series, is_vague_series, parse_components_series,
+        tokens_series, with_normalized)
     from ehdc_llpg_address_matching_spark.functions.phonetic import \
-        with_street_phonetic
+        phonetic_series
     from ehdc_llpg_address_matching_spark.functions.symspell import SymSpell
 
     sym = SymSpell()
@@ -224,46 +229,56 @@ def test_with_normalized_matches_unfused_chain(spark):
         ("4", "Rose Cottage, Selborne", "20002"),
         ("5", "", ""),
         ("6", None, None),
+        # stop tokens (THE, AND, AT, OF) in the matching core
+        ("7", "The Old Forge, 7 Mill Lane & Church Rd, Liss GU33 7AA", "7"),
+        ("8", "Rear of 14b Station Road at the Green, Alton", None),
     ]
     df = spark.createDataFrame(
         rows, "doc_id string, raw_address string, raw_uprn string")
+    inp = pd.DataFrame(rows, columns=["doc_id", "raw_address", "raw_uprn"])
 
-    old = with_canonical(df, raw_col="raw_address")
-    old = with_components(old, raw_col="raw_address")
+    def expected(symspell, with_uprn):
+        c = canonicalize_series(inp["raw_address"])
+        p = parse_components_series(inp["raw_address"])
+        core, street = c["addr_core"], p["street"]
+        if symspell is not None:
+            core = symspell.correct_tokens_series(core,
+                                                  skip=STREET_SUFFIX_WORDS)
+            street = symspell.correct_tokens_series(street,
+                                                    skip=STREET_SUFFIX_WORDS)
+        out = inp.assign(
+            addr_can=c["addr_can"], postcode=c["postcode"],
+            addr_core=core,
+            tokens=tokens_series(c["addr_core"]),
+            house_numbers=house_numbers_series(c["addr_core"]),
+            is_vague=is_vague_series(c["addr_can"]),
+            c_house=p["house_number"], c_street=street,
+            c_locality=p["locality"], c_name=p["name"],
+            c_postcode=p["postcode"],
+            parse_confidence=p["parse_confidence"].astype(float),
+            parse_valid=p["parse_valid"].astype(bool))
+        if with_uprn:
+            out = out.assign(uprn_clean=clean_uprn_series(inp["raw_uprn"]))
+        first = street.fillna("").str.split().str[0].fillna("")
+        return out.assign(street_phonetic=phonetic_series(first))
 
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import StringType
+    def cells(pdf):
+        def norm(v):
+            if isinstance(v, (list, np.ndarray)):
+                return list(v)
+            return None if v is None or v != v else v
+        return {c: [norm(v) for v in pdf[c]] for c in pdf.columns}
 
-    @pandas_udf(StringType())
-    def _clean(s: pd.Series) -> pd.Series:
-        return clean_uprn_series(s)
+    def check(got, want):
+        got = got.toPandas().sort_values("doc_id").reset_index(drop=True)
+        assert list(got.columns) == list(want.columns)
+        assert cells(got) == cells(want)
 
-    old = old.withColumn("uprn_clean", _clean(F.col("raw_uprn")))
-    b = spark.sparkContext.broadcast(sym)
-
-    @pandas_udf(StringType())
-    def _correct(s: pd.Series) -> pd.Series:
-        return b.value.correct_tokens_series(s, skip=STREET_SUFFIX_WORDS)
-
-    old = (old.withColumn("addr_core", _correct(F.col("addr_core")))
-              .withColumn("c_street", _correct(F.col("c_street"))))
-    old = with_street_phonetic(old, street_col="c_street")
-
-    new = with_normalized(df, raw_col="raw_address", uprn_col="raw_uprn",
-                          symspell=sym)
-    assert new.schema == old.schema
-    assert new.exceptAll(old).count() == 0
-    assert old.exceptAll(new).count() == 0
-
-    # no-symspell / no-uprn variant (the prepare_gazetteer shape)
-    old2 = with_canonical(df, raw_col="raw_address")
-    old2 = with_components(old2, raw_col="raw_address")
-    old2 = with_street_phonetic(old2, street_col="c_street")
-    new2 = with_normalized(df, raw_col="raw_address")
-    assert new2.schema == old2.schema
-    assert new2.exceptAll(old2).count() == 0
-    assert old2.exceptAll(new2).count() == 0
+    # documents shape: UPRN clean + SymSpell
+    check(with_normalized(df, raw_col="raw_address", uprn_col="raw_uprn",
+                          symspell=sym), expected(sym, True))
+    # gazetteer shape (prepare_gazetteer): neither
+    check(with_normalized(df, raw_col="raw_address"), expected(None, False))
 
 
 def test_with_normalized_single_arrow_node(spark):

@@ -7,14 +7,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from ehdc_llpg_address_matching_spark.functions.phonetic import phonetic_code
-
+from ehdc_llpg_address_matching_spark.functions.similarity import \
+    trigram_grams_expr
 from ehdc_llpg_address_matching_spark.operators import decision as D
 from ehdc_llpg_address_matching_spark.operators import scoring as S
 
 
 def _decide_pair(spark, d_house, g_house, d_street, g_street,
                  locality="ALTON", pc="GU34 1AA"):
-    """Run one candidate pair through features+score+decision."""
+    """Run one candidate pair through features+score+decision, in
+    pipeline order."""
     d_core = f"{d_house} {d_street} {locality}".strip()
     g_core = f"{g_house} {g_street} {locality}".strip()
     row = {
@@ -43,8 +45,13 @@ def _decide_pair(spark, d_house, g_house, d_street, g_street,
               "d_e double, d_n double, g_e double, g_n double, "
               "g_status string, g_source_type string")
     df = spark.createDataFrame([row], schema)
-    df = S.with_pair_features(df)
+    # the per-side gram arrays attach_pair_attrs adds in the pipeline
+    for grams, src in (("d_grams", "d_core"), ("g_grams", "g_core"),
+                       ("d_street_grams", "d_street"),
+                       ("g_street_grams", "g_street")):
+        df = df.withColumn(grams, trigram_grams_expr(F.col(src)))
     df = S.with_column_features(df)
+    df = S.with_pair_features(df)
     df = S.with_score(df)
     df = D.decide(D.keep_best_per_uprn(df))
     return df.select("score", "decision", "house_conflict",

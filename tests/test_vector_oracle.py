@@ -22,6 +22,9 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from ehdc_llpg_address_matching_spark.operators.candidates import \
+    VECTOR_MIN_SIM
+
 
 @pytest.fixture(scope="module")
 def vec_fixture(spark):
@@ -71,7 +74,7 @@ def test_vector_oracle_margins(vec_fixture):
 
     # 2. no cosine sits near the keep-gate: membership of the
     #    candidate set is identical under either implementation
-    gate = 2 * fx["pcfg"].vector_min_sim - 1
+    gate = 2 * VECTOR_MIN_SIM - 1
     gate_margin = float(np.abs(cos_np - gate).min())
     assert gate_margin > 50 * max(max_diff, 1e-9), (
         f"cosine within {gate_margin} of keep-gate {gate}")
