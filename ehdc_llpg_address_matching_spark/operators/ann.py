@@ -29,19 +29,34 @@ def _collect_matrix(corpus: DataFrame, id_col: str, vec_col: str):
     return ids, mat
 
 
+def _topk(sims: np.ndarray, ids: np.ndarray, k: int):
+    """(row, col, rank) of the top-k columns of each row of a (queries x
+    corpus) cosine block, by cosine desc, id asc: the window order of
+    lsh_topk and ivf_topk. Every column tied at the k-th cosine joins
+    argpartition's pick, so the ids decide which ties survive."""
+    kk = min(k, sims.shape[1])
+    idx = np.argpartition(-sims, kth=kk - 1, axis=1)[:, :kk]
+    thr = np.take_along_axis(sims, idx, axis=1).min(axis=1, keepdims=True)
+    row, col = np.nonzero(sims >= thr)
+    order = np.lexsort((ids[col], -sims[row, col], row))
+    row, col = row[order], col[order]
+    rank = np.arange(len(row)) - np.searchsorted(row, row)
+    keep = rank < kk
+    return row[keep], col[keep], rank[keep] + 1
+
+
 def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      exclude_self: bool = True) -> DataFrame:
     """(query_id, neighbor_id, cosine, rank). Deterministic tie-break:
-    cosine desc, neighbor_id asc."""
-    spark = queries.sparkSession
-    ids, mat = _collect_matrix(corpus, id_col, vec_col)
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(mat)
+    cosine desc, neighbor_id asc. One GEMM per Arrow batch of
+    L2-normalized queries against the broadcast corpus matrix, then the
+    top-k kernel candidates.cand_vector's broadcast route shares."""
+    b_matrix = queries.sparkSession.sparkContext.broadcast(
+        _collect_matrix(corpus, id_col, vec_col))
 
     def run(it):
-        cids = b_ids.value
-        cmat = b_mat.value
+        cids, cmat = b_matrix.value
         for pdf in it:
             if len(pdf) == 0:
                 continue
@@ -53,25 +68,11 @@ def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
                 for r, qid in enumerate(qids):
                     same = np.nonzero(cids == qid)[0]
                     sims[r, same] = -2.0
-            kk = min(k, sims.shape[1])
-            idx = np.argpartition(-sims, kth=kk - 1, axis=1)[:, :kk]
-            out_q, out_n, out_s, out_r = [], [], [], []
-            for r in range(len(qids)):
-                # argpartition picks an ARBITRARY subset of candidates
-                # tied at the k-th cosine; widen to every index at or
-                # above the boundary value so the documented tie-break
-                # (cosine desc, id asc) decides which ties survive —
-                # matching the window semantics of lsh/ivf_topk
-                thr = sims[r, idx[r]].min()
-                cand = np.nonzero(sims[r] >= thr)[0]
-                order = np.lexsort((cids[cand], -sims[r, cand]))
-                cand = cand[order][:kk]
-                out_q.extend([qids[r]] * len(cand))
-                out_n.extend(cids[cand].tolist())
-                out_s.extend(sims[r, cand].astype(float).tolist())
-                out_r.extend(range(1, len(cand) + 1))
-            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n,
-                                "cosine": out_s, "rank": out_r})
+            row, col, rank = _topk(sims, cids, k)
+            yield pd.DataFrame({"query_id": qids[row],
+                                "neighbor_id": cids[col],
+                                "cosine": sims[row, col].astype(float),
+                                "rank": rank})
 
     qid_type = dict(queries.dtypes)[id_col]
     return queries.select(id_col, vec_col).mapInPandas(
@@ -94,8 +95,6 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
     vectors, deterministic seed), then everything is a broadcast of a
     (n_cells x d) matrix plus ONE shuffle on the short cell key. Recall
     grows with n_probe; n_probe = n_cells degenerates to exact."""
-    import numpy as np
-
     spark = queries.sparkSession
     # --- train the coarse quantizer on a deterministic sample.
     # Hash-ordered top-k, NOT count()+sample()+limit(): the old shape

@@ -36,6 +36,11 @@ MAX_RANGE_UNITS = 50
 # reads it too, so the engine and its oracle share one value.
 VECTOR_MIN_SIM = 0.70
 
+# cand_vector's IVF route: each address probes IVF_PROBE of IVF_CELLS
+# k-means cells (probing every cell makes the route exact)
+IVF_CELLS = 64
+IVF_PROBE = 8
+
 
 def expand_ranges(gazp: DataFrame) -> DataFrame:
     """Gazetteer densification (J10; reference:
@@ -636,98 +641,68 @@ def cand_hierarchical(uaddr: DataFrame, gazp: DataFrame,
 
 def cand_vector(uaddr: DataFrame, gazp: DataFrame, top_k: int = 10,
                 min_sim: float = VECTOR_MIN_SIM) -> DataFrame:
-    """J9: embedding ANN without a vector service. The gazetteer
-    embedding matrix (n x d float32) is collected once and BROADCAST;
-    each Arrow batch of addresses is hash-embedded and scored against
-    it with one (batch x d) @ (d x n) GEMM; np.argpartition top-k.
+    """J9: embedding ANN without a vector service, replacing Qdrant HNSW
+    (reference: internal/vector/qdrant.go:45-110) and the brute-force
+    store (vector_db.go:68-118). Addresses are hash-embedded at the
+    width of the gazetteer's embeddings, read from one row. The route
+    follows the size of the original rows' float32 matrix:
 
-    At 10^12 docs this stays the right shape: the model side is small
-    (gazetteer), the doc side streams through mapInPandas, nothing
-    shuffles. Replaces Qdrant HNSW (reference: internal/vector/
-    qdrant.go:45-110) and the brute-force store (vector_db.go:68-118).
-    """
-    import numpy as np
-    import pandas as pd
+      broadcast — rows x dim x 4 B fits under the session's
+          spark.sql.autoBroadcastJoinThreshold (the reference's 72K x 64
+          gazetteer is 18 MB): the matrix is broadcast and each Arrow
+          batch of addresses is scored with one GEMM and ann's top-k
+          kernel. Nothing shuffles.
+      IVF — it does not, or the threshold is -1 (10^8 x 384 is ~150 GB):
+          ann.ivf_topk, each address probing IVF_PROBE of IVF_CELLS
+          k-means cells; the only shuffle is on the cell id.
 
-    gaz_rows = (gazp.filter(F.col("source_type") == "original")
-                .select("uprn", "embedding").collect())
-    uprns = np.array([r["uprn"] for r in gaz_rows])
-    mat = np.array([r["embedding"] for r in gaz_rows], dtype=np.float32)
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    mat = mat / np.maximum(norms, 1e-12)
+    The size is counted, not taken from Catalyst, which sizes array
+    columns ~3x low: at most threshold // (dim x 4) + 1 rows are
+    collected. Both routes keep the top_k by (cosine desc, uprn asc)
+    and return (addr_id, uprn, vec_sim, method='vector'), vec_sim being
+    the reference's (dot+1)/2 in [0, 1] (internal/engine/
+    vector_db.go:171-193), kept when >= min_sim."""
+    from .ann import _collect_matrix, _topk, ivf_topk
+    from ..functions.embed import hash_embed_batch
+
     spark = uaddr.sparkSession
-    b_uprns = spark.sparkContext.broadcast(uprns)
-    b_mat = spark.sparkContext.broadcast(mat)
-
-    from ..functions.embed import hash_embed_batch
-
-    def score_batches(it):
-        u = b_uprns.value
-        m = b_mat.value
-        k = min(top_k, len(u))
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            q = hash_embed_batch(pdf["addr_core"], m.shape[1])
-            sims = q @ m.T  # (batch, n_gaz)
-            idx = np.argpartition(-sims, kth=k - 1, axis=1)[:, :k]
-            rows_sim = np.take_along_axis(sims, idx, axis=1)
-            keep = rows_sim >= (2 * min_sim - 1)  # cosine in [-1,1] space
-            bi, ki = np.nonzero(keep)
-            yield pd.DataFrame({
-                "addr_id": pdf["addr_id"].to_numpy()[bi],
-                "uprn": u[idx[bi, ki]],
-                # clamp to the reference's (dot+1)/2 in [0,1]
-                # (internal/engine/vector_db.go:171-193)
-                "vec_sim": (rows_sim[bi, ki].astype(float) + 1.0) / 2.0,
-            })
-
-    out = uaddr.select("addr_id", "addr_core").mapInPandas(
-        score_batches, schema="addr_id string, uprn string, vec_sim double")
-    return out.withColumn("method", F.lit("vector"))
-
-
-def cand_vector_ivf(uaddr: DataFrame, gazp: DataFrame,
-                    top_k: int = 10, min_sim: float = VECTOR_MIN_SIM,
-                    n_cells: int = 64, n_probe: int = 8) -> DataFrame:
-    """J9 at gazetteer scales where broadcast is impossible: a 10^8-row
-    x 384-dim float32 gazetteer matrix is ~150 GB — cand_vector's
-    collect-and-broadcast GEMM (the right plan for the reference's
-    72K-row gazetteer) cannot ship that to every executor. This path
-    routes the same semantics through the IVF coarse quantizer
-    (operators/ann.ivf_topk): centroids train on a bounded seeded
-    sample, the gazetteer is bucketed by nearest centroid in one
-    map-only pass, each address probes its n_probe nearest cells, and
-    the only shuffle is the equi-join on the short cell id. Recall is
-    tunable via n_probe (n_probe = n_cells degenerates to exact). The
-    addresses are hash-embedded at the width of the gazetteer's
-    embeddings, read from one row — O(1) at any corpus scale, not the
-    whole-matrix collect this path exists to avoid.
-
-    Returns (addr_id, uprn, vec_sim, method='vector') — same contract,
-    keep-gate and (dot+1)/2 similarity convention as cand_vector, so
-    the two are drop-in alternatives behind PipelineConfig.vector_mode."""
-    from .ann import ivf_topk
-    from ..functions.embed import hash_embed_batch
-
+    orig = gazp.filter(F.col("source_type") == "original")
     dim = len(gazp.select("embedding").first()[0])
+    cap = (spark._jsparkSession.sessionState().conf()
+           .autoBroadcastJoinThreshold()) // (dim * 4)
+    matrix = (_collect_matrix(orig.limit(cap + 1), "uprn", "embedding")
+              if cap > 0 else None)
+    if matrix is not None and len(matrix[0]) <= cap:
+        b_matrix = spark.sparkContext.broadcast(matrix)
 
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, FloatType
+        def score_batches(it):
+            uprns, mat = b_matrix.value
+            for pdf in it:
+                if len(pdf):
+                    sims = hash_embed_batch(pdf["addr_core"], dim) @ mat.T
+                    row, col, _ = _topk(sims, uprns, top_k)
+                    yield pd.DataFrame({
+                        "query_id": pdf["addr_id"].to_numpy()[row],
+                        "neighbor_id": uprns[col],
+                        "cosine": sims[row, col].astype(float)})
 
-    @pandas_udf(ArrayType(FloatType()))
-    def _embed(texts: pd.Series) -> pd.Series:
-        m = hash_embed_batch(texts, dim)
-        return pd.Series([row.tolist() for row in m])
+        out = uaddr.select("addr_id", "addr_core").mapInPandas(
+            score_batches,
+            schema="query_id string, neighbor_id string, cosine double")
+    else:
+        from pyspark.sql.functions import pandas_udf
+        from pyspark.sql.types import ArrayType, FloatType
 
-    q = uaddr.select(F.col("addr_id").alias("vec_id"),
-                     _embed(F.col("addr_core")).alias("embedding"))
-    c = (gazp.filter(F.col("source_type") == "original")
-         .select(F.col("uprn").alias("vec_id"), "embedding"))
-    out = ivf_topk(q, c, k=top_k, n_cells=n_cells, n_probe=n_probe,
-                   exclude_self=False)
-    # same keep-gate as cand_vector: cosine >= 2*min_sim - 1, reported
-    # in the reference's (dot+1)/2 in-[0,1] space
+        @pandas_udf(ArrayType(FloatType()))
+        def _embed(texts: pd.Series) -> pd.Series:
+            return pd.Series([r.tolist() for r in
+                              hash_embed_batch(texts, dim)])
+
+        q = uaddr.select(F.col("addr_id").alias("vec_id"),
+                         _embed(F.col("addr_core")).alias("embedding"))
+        c = orig.select(F.col("uprn").alias("vec_id"), "embedding")
+        out = ivf_topk(q, c, k=top_k, n_cells=IVF_CELLS, n_probe=IVF_PROBE,
+                       exclude_self=False)
     return (out.filter(F.col("cosine") >= 2 * min_sim - 1)
             .select(F.col("query_id").alias("addr_id"),
                     F.col("neighbor_id").alias("uprn"),

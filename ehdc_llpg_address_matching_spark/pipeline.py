@@ -55,13 +55,6 @@ class PipelineConfig:
     # internal/engine/threshold_tuner.go:37-271)
     auto_tune: bool = False
     vector_top_k: int = 10
-    # 'broadcast': collect-and-broadcast GEMM (right for reference-size
-    # 72K-row gazetteers). 'ivf': coarse-quantizer path for gazetteers
-    # whose embedding matrix can't be broadcast (10^8 rows) — same
-    # contract, one shuffle on the cell id (candidates.cand_vector_ivf)
-    vector_mode: str = "broadcast"
-    ivf_cells: int = 64
-    ivf_probe: int = 8
     enable_vector: bool = True
     enable_spatial: bool = True
     enable_symspell: bool = True
@@ -119,13 +112,7 @@ def generate_candidates(uaddr: DataFrame, gazp: DataFrame,
     if cfg.enable_spatial:
         gens.append(C.cand_spatial(uaddr, gazp))
     if cfg.enable_vector and "embedding" in gazp.columns:
-        if cfg.vector_mode == "ivf":
-            gens.append(C.cand_vector_ivf(uaddr, gazp,
-                                          top_k=cfg.vector_top_k,
-                                          n_cells=cfg.ivf_cells,
-                                          n_probe=cfg.ivf_probe))
-        else:
-            gens.append(C.cand_vector(uaddr, gazp, top_k=cfg.vector_top_k))
+        gens.append(C.cand_vector(uaddr, gazp, top_k=cfg.vector_top_k))
     # J5 hierarchical cascade last: a doc matchable ONLY via the
     # phonetic/locality levels (no postcode, trigram-block-defeating
     # typo) has no other generator

@@ -18,8 +18,8 @@ codegen, no UDFs.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (ArrayType, IntegerType, StringType,
-                               StructField, StructType)
+from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
+                               StringType, StructField, StructType)
 
 SPAN_SCHEMA = ArrayType(StructType([
     StructField("kind", StringType()),
@@ -28,9 +28,14 @@ SPAN_SCHEMA = ArrayType(StructType([
     StructField("offset", IntegerType()),
 ]))
 
+# the side channels after spans read as NULL where a file lacks them
 DOCUMENTS_SCHEMA = StructType([
     StructField("doc_id", StringType(), False),
     StructField("spans", SPAN_SCHEMA),
+    StructField("raw_uprn", StringType()),
+    StructField("easting", DoubleType()),
+    StructField("northing", DoubleType()),
+    StructField("group_key", StringType()),
 ])
 
 

@@ -22,7 +22,7 @@ from ..sources.documents import DOCUMENTS_SCHEMA
 
 def read_document_stream(spark: SparkSession, path: str,
                          max_files_per_trigger: int = 16) -> DataFrame:
-    """File-source stream of spans documents (parquet drop directory)."""
+    """File-source stream of documents (parquet drop directory)."""
     return (spark.readStream
             .schema(DOCUMENTS_SCHEMA)
             .option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -36,14 +36,17 @@ def start_incremental_linkage(stream: DataFrame, gaz: DataFrame,
     gazetteer is prepared ONCE at stream start (normalize + range
     expansion + blocking keys, eager localCheckpoint so the work is
     materialized, not a lazy plan replayed per batch) and the closure
-    hands the prepared frame to every micro-batch run. Each batch
-    releases its own run's checkpoints after its write, so the pinned
-    storage does not grow with the number of batches."""
+    hands the prepared frame, the stream's one pin, to every micro-batch
+    run. Each batch releases its own run's checkpoints after its write,
+    so the pinned storage does not grow with the number of batches."""
     from ..operators import candidates as C
     from ..pipeline import PipelineConfig, run_pipeline
+    from ..session import Pins
     cfg = cfg or PipelineConfig(enable_vector=False, enable_spatial=False,
                                 enable_symspell=False)
-    gazp = C.prepare_gazetteer(gaz).localCheckpoint(eager=True)
+    inner = Pins(gaz)
+    gazp = inner.adopt(C.prepare_gazetteer(gaz)).localCheckpoint(eager=True)
+    inner.release()  # prepare_gazetteer's own cut, now unread under gazp
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():

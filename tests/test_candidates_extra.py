@@ -253,3 +253,107 @@ def test_rule_rewrite_plan_has_hot_token_anti_join(spark):
     plan = cand_rule_rewrite(docs, _toy_gaz(spark))._jdf \
         .queryExecution().executedPlan().toString()
     assert plan.count("LeftAnti") >= 2
+
+
+# ------------------------------------------------------------------ J9
+
+_VEC_DIM = 64
+_VEC_GAZ = ["10 HIGH STREET ALTON", "12 HIGH STREET ALTON",
+            "14 HIGH STREET ALTON", "3 MILL LANE ALTON",
+            "5 MILL LANE ALTON", "7 CHURCH ROAD ROPLEY",
+            "9 CHURCH ROAD ROPLEY", "1 THE GREEN ROPLEY",
+            "2 STATION ROAD ALTON", "4 STATION ROAD ALTON",
+            "FLAT 1 12 HIGH STREET ALTON", "HILL FARM ROPLEY"]
+_VEC_QUERIES = ["10 HIGH STREET ALTON", "12 HIGH ST ALTON",
+                "5 MILL LANE", "CHURCH ROAD ROPLEY 7",
+                "2 STATION RD ALTON", "HILL FARM"]
+
+
+def _vec_frames(spark, gaz_rows):
+    """(uaddr, gazp) carrying only the columns cand_vector reads.
+    gaz_rows: (uprn, address) in matrix order; the addresses are one
+    partition so the engine's GEMM has the reference's shape."""
+    from ehdc_llpg_address_matching_spark.functions.embed import \
+        hash_embed_batch
+    emb = hash_embed_batch(pd.Series([a for _, a in gaz_rows]), _VEC_DIM)
+    gazp = spark.createDataFrame(
+        [(u, "original", [float(x) for x in e])
+         for (u, _), e in zip(gaz_rows, emb)],
+        "uprn string, source_type string, embedding array<float>")
+    uaddr = spark.createDataFrame(
+        [(f"a{i}", q) for i, q in enumerate(_VEC_QUERIES)],
+        "addr_id string, addr_core string").coalesce(1)
+    return uaddr, gazp
+
+
+def _vec_pairs(df):
+    return {(r["addr_id"], r["uprn"]): r["vec_sim"] for r in df.collect()}
+
+
+def test_vector_broadcast_vec_sim_is_the_gemm(spark):
+    """The broadcast route's vec_sim is bit-identical to one float32
+    GEMM of the hash-embedded addresses against the row-normalized
+    gazetteer matrix, and it keeps exactly the pairs at or above the
+    keep-gate when top_k covers the gazetteer."""
+    from ehdc_llpg_address_matching_spark.functions.embed import \
+        hash_embed_batch
+    rows = [(str(100 + i), a) for i, a in enumerate(_VEC_GAZ)]
+    uaddr, gazp = _vec_frames(spark, rows)
+    got = _vec_pairs(C.cand_vector(uaddr, gazp, top_k=len(rows)))
+    mat = hash_embed_batch(pd.Series(_VEC_GAZ), _VEC_DIM)
+    mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True),
+                           1e-12)
+    sims = hash_embed_batch(pd.Series(_VEC_QUERIES), _VEC_DIM) @ mat.T
+    want = {(f"a{i}", u): (float(sims[i, j]) + 1.0) / 2.0
+            for i in range(len(_VEC_QUERIES))
+            for j, (u, _) in enumerate(rows)
+            if sims[i, j] >= 2 * C.VECTOR_MIN_SIM - 1}
+    assert got == want
+    assert len(want) > len(_VEC_QUERIES)
+
+
+def test_vector_ties_break_by_uprn(spark):
+    """Two UPRNs with one address tie at the k-th cosine: the one with
+    the smaller uprn is kept whatever the gazetteer's row order."""
+    rows = [("300", "10 HIGH STREET ALTON"),
+            ("200", "12 HIGH STREET ALTON"),
+            ("100", "12 HIGH STREET ALTON")] + \
+        [(str(400 + i), a) for i, a in enumerate(_VEC_GAZ[3:])]
+    got = []
+    for order in (rows, rows[::-1]):
+        uaddr, gazp = _vec_frames(spark, order)
+        got.append(set(_vec_pairs(
+            C.cand_vector(uaddr.filter(F.col("addr_id") == "a0"), gazp,
+                          top_k=2))))
+    assert got[0] == got[1] == {("a0", "300"), ("a0", "100")}
+
+
+@pytest.mark.parametrize("cap_rows,collected",
+                         [(12, 12), (11, 12), (3, 4), (None, None)],
+                         ids=["fits", "one_row_over", "small", "off"])
+def test_vector_route_from_size(spark, monkeypatch, request, cap_rows,
+                                collected):
+    """cand_vector broadcasts iff the gazetteer's float32 matrix fits
+    under autoBroadcastJoinThreshold, and collects at most cap + 1 rows
+    to find out. The exact IVF route gives the broadcast route's pairs."""
+    from ehdc_llpg_address_matching_spark.operators import ann
+    rows = [(str(100 + i), a) for i, a in enumerate(_VEC_GAZ)]
+    uaddr, gazp = _vec_frames(spark, rows)
+    want = _vec_pairs(C.cand_vector(uaddr, gazp, top_k=3))
+    ivf_calls = request.getfixturevalue("ivf_route")
+    seen, collect_matrix = [], ann._collect_matrix
+
+    def collect(*a):
+        ids, mat = collect_matrix(*a)
+        seen.append(len(ids))
+        return ids, mat
+
+    monkeypatch.setattr(ann, "_collect_matrix", collect)
+    if cap_rows:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
+                       str(cap_rows * _VEC_DIM * 4))
+    got = _vec_pairs(C.cand_vector(uaddr, gazp, top_k=3))
+    assert seen == ([collected] if collected else [])
+    assert len(ivf_calls) == (0 if cap_rows == len(rows) else 1)
+    assert got.keys() == want.keys()
+    assert all(abs(got[p] - want[p]) < 1e-6 for p in want)

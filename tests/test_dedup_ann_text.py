@@ -88,6 +88,28 @@ def test_brute_force_topk(vectors):
     assert (out.groupby("query_id").size() == 3).all()
 
 
+@pytest.mark.parametrize("ids", [np.arange(40)[::-1],
+                                 np.array([f"u{i:02d}" for i in range(40)])],
+                         ids=["int", "str"])
+def test_topk_kernel_matches_row_loop(ids):
+    """ann._topk (vectorized) equals the per-row loop it replaced: widen
+    argpartition's pick to every column tied at the k-th cosine, order
+    by (cosine desc, id asc), keep k. Cosines are coarsely quantized so
+    ties cross the k-th boundary."""
+    rs = np.random.RandomState(3)
+    sims = np.round(rs.uniform(-1, 1, (25, 40)), 1).astype(np.float32)
+    for k in (1, 3, 10, 60):
+        row, col, rank = ann._topk(sims, ids, k)
+        want = []
+        kk = min(k, sims.shape[1])
+        idx = np.argpartition(-sims, kth=kk - 1, axis=1)[:, :kk]
+        for r in range(sims.shape[0]):
+            cand = np.nonzero(sims[r] >= sims[r, idx[r]].min())[0]
+            cand = cand[np.lexsort((ids[cand], -sims[r, cand]))][:kk]
+            want += [(r, c, i + 1) for i, c in enumerate(cand)]
+        assert list(zip(row.tolist(), col.tolist(), rank.tolist())) == want
+
+
 def test_lsh_topk_finds_close_pair(vectors):
     out = ann.lsh_topk(vectors, vectors, k=3, n_planes=8, n_tables=6).toPandas()
     hits = out[(out.query_id == 100) & (out["rank"] == 1)]

@@ -91,17 +91,43 @@ def test_streaming_incremental_linkage(spark, tmp_path, corpus):
     assert "batch_id" in res.columns
     assert res.select("batch_id").distinct().count() == 2
     # each batch releases its run's checkpoints: only the gazetteer
-    # prepared at stream start stays pinned (prepare_gazetteer's
-    # pre-expansion cut and the prepared frame), however many batches.
+    # prepared at stream start stays pinned, one checkpoint, however
+    # many batches.
     # "-", not "==": the ContextCleaner may drop unrelated RDDs meanwhile
     grown = set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) \
         - pinned
-    assert len(grown) <= 2, grown
+    assert len(grown) <= 1, grown
     # exactly-once-ish: rerunning with the same checkpoint adds nothing
     q2 = start_incremental_linkage(read_document_stream(spark, src),
                                    gaz, out, chk, cfg=CFG)
     q2.awaitTermination(60)
     assert spark.read.parquet(out).count() == res.count()
+
+
+def test_streaming_keeps_side_channel_columns(spark, tmp_path, corpus):
+    """Streamed documents keep raw_uprn, easting, northing and
+    group_key: on a corpus that carries them, one micro-batch of
+    start_incremental_linkage emits the (doc_id, uprn, method) rows of
+    run_pipeline with the same config, legacy-UPRN matches included."""
+    from ehdc_llpg_address_matching_spark.pipeline import run_pipeline
+    docs, gaz, _ = corpus
+    src, out = str(tmp_path / "side_in"), str(tmp_path / "side_out")
+    docs.coalesce(1).write.parquet(src)
+    q = start_incremental_linkage(read_document_stream(spark, src), gaz,
+                                  out, str(tmp_path / "side_chk"), cfg=CFG)
+    q.awaitTermination(180)
+    streamed = spark.read.parquet(out)
+    assert streamed.select("batch_id").distinct().count() == 1
+    batch = run_pipeline(spark, spark.read.parquet(src), gaz, CFG)
+
+    def rows(df):
+        return {tuple(r) for r in
+                df.select("doc_id", "uprn", "method").collect()}
+
+    want = rows(batch["matches"])
+    batch["release"]()
+    assert rows(streamed) == want
+    assert any(m == "legacy_uprn" for _, _, m in want)
 
 
 def test_windowed_event_counts_streaming_mode(spark, tmp_path):
@@ -206,17 +232,22 @@ def test_stream_static_candidate_join(spark, tmp_path, corpus):
 
 
 @pytest.mark.parametrize(
-    "cfg",
-    [CFG, replace(CFG, auto_tune=True), PipelineConfig(),
-     replace(CFG, scorer="spec", thresholds=D.Thresholds.spec_tiers())],
-    ids=["default", "auto_tune", "all_generators", "spec"])
-def test_phased_matches_monolithic_parity(spark, tmp_path, corpus, cfg):
+    "cfg,ivf",
+    [(CFG, False), (replace(CFG, auto_tune=True), False),
+     (PipelineConfig(), False),
+     (replace(CFG, scorer="spec", thresholds=D.Thresholds.spec_tiers()),
+      False),
+     (replace(CFG, enable_vector=True), True)],
+    ids=["default", "auto_tune", "all_generators", "spec", "ivf"])
+def test_phased_matches_monolithic_parity(spark, tmp_path, request,
+                                          corpus, cfg, ivf):
     """The phased runner and the monolithic run_pipeline must emit
     IDENTICAL doc->uprn assignments and audit decisions, with and
     without the threshold auto-tune (the phased p4 once decided with
     the configured thresholds whatever cfg.auto_tune said), with
     SymSpell and the spatial and vector generators on, under the spec
-    scorer, and on exact score ties —
+    scorer, with the vector generator on its IVF route (broadcast off,
+    every cell probed, so IVF is exact) and on exact score ties —
     round-4 fix: p5/p6's keep-best used max_by over (…, uprn) (max
     uprn wins ties) while the monolithic precedence window picks the
     MIN uprn; both now break ties toward the minimum uprn.
@@ -265,8 +296,11 @@ def test_phased_matches_monolithic_parity(spark, tmp_path, corpus, cfg):
     gaz = gaz.unionByName(spark.createDataFrame(hier_gaz,
                                                 GAZ_SPARK_SCHEMA))
     wh = Warehouse(spark, str(tmp_path / "wh_parity"))
+    ivf_calls = request.getfixturevalue("ivf_route") if ivf else []
     out_p = run_phased(spark, docs, gaz, wh, run_id="rp", cfg=cfg)
     out_m = run_pipeline(spark, docs, gaz, cfg)
+    # both runners call the one vector generator, so both take IVF
+    assert len(ivf_calls) == (2 if ivf else 0)
     mp = {(r["doc_id"], r["uprn"])
           for r in out_p["matches"].select("doc_id", "uprn").collect()}
     mm = {(r["doc_id"], r["uprn"])
@@ -287,6 +321,11 @@ def test_phased_matches_monolithic_parity(spark, tmp_path, corpus, cfg):
         assert out_m["thresholds_used"].high != D.Thresholds().high
         assert audit(out_m["audit_candidates"]) != audit(D.decide(
             out_m["scored_pairs"], D.Thresholds()))
+    if ivf:
+        methods = (out_p["candidates"]
+                   .select(F.explode("methods").alias("m"))
+                   .select("m").distinct().toPandas().m.tolist())
+        assert "vector" in methods
 
 
 def test_phased_resume_recomputes_phase_missing_a_table(spark, tmp_path,
@@ -309,32 +348,3 @@ def test_phased_resume_recomputes_phase_missing_a_table(spark, tmp_path,
     out2 = run_phased(spark, docs, gaz, wh, run_id="r2", cfg=CFG)
     assert out2["matches"].count() == n1
     assert wh.exists("scored_pairs")  # recomputed and re-saved
-
-
-def test_phased_honors_ivf_vector_mode(spark, tmp_path):
-    """run_phased must route J9 through the SAME vector path as the
-    monolithic pipeline (round-5 review finding: p3 ignored
-    cfg.vector_mode and always broadcast — at the 10^8-row gazetteer
-    IVF exists for, that collects the full embedding matrix to the
-    driver). n_probe = n_cells makes IVF exact, so phased-IVF matches
-    must equal monolithic-IVF matches, with vector candidates present."""
-    from ehdc_llpg_address_matching_spark.pipeline import run_pipeline
-    from ehdc_llpg_address_matching_spark.synth import (SynthConfig,
-                                                        synth_tables)
-    cfg = PipelineConfig(vector_mode="ivf", ivf_cells=8, ivf_probe=8,
-                         enable_spatial=False, enable_symspell=False)
-    sgaz, sdocs, _ = synth_tables(SynthConfig(seed=13, n_gazetteer=120,
-                                              n_docs=150))
-    d, g = spark.createDataFrame(sdocs), spark.createDataFrame(sgaz)
-    wh = Warehouse(spark, str(tmp_path / "wh_ivf"))
-    out_p = run_phased(spark, d, g, wh, run_id="ri", cfg=cfg)
-    out_m = run_pipeline(spark, d, g, cfg)
-    mp = {(r["doc_id"], r["uprn"])
-          for r in out_p["matches"].select("doc_id", "uprn").collect()}
-    mm = {(r["doc_id"], r["uprn"])
-          for r in out_m["matches"].select("doc_id", "uprn").collect()}
-    assert mp == mm
-    methods = (out_p["candidates"]
-               .select(F.explode("methods").alias("m"))
-               .select("m").distinct().toPandas().m.tolist())
-    assert "vector" in methods

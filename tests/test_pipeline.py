@@ -282,18 +282,18 @@ def test_historic_uprn_representative_address(spark):
     assert recs.iloc[0].n_source_docs == 4
 
 
-def test_vector_mode_ivf_pipeline(spark):
-    """The IVF vector path (no gazetteer broadcast — the 10^8-row
-    deployment shape) is a drop-in for the broadcast GEMM: pipeline
-    stays green and vector candidates appear. n_probe = n_cells makes
-    IVF exact, so the accepted matches must equal broadcast mode's."""
+def test_vector_route_ivf_pipeline(spark, request):
+    """With broadcast off cand_vector takes the IVF route, the 10^8-row
+    gazetteer's shape. Probing every cell makes IVF exact, so the
+    accepted matches must equal the broadcast route's, and vector
+    candidates appear."""
     cfg = SynthConfig(seed=13, n_gazetteer=120, n_docs=150)
     gaz, docs, gold = synth_tables(cfg)
     d, g = spark.createDataFrame(docs), spark.createDataFrame(gaz)
-    out_b = run_pipeline(spark, d, g, PipelineConfig(
-        vector_mode="broadcast"))
-    out_i = run_pipeline(spark, d, g, PipelineConfig(
-        vector_mode="ivf", ivf_cells=8, ivf_probe=8))
+    out_b = run_pipeline(spark, d, g)
+    ivf_calls = request.getfixturevalue("ivf_route")
+    out_i = run_pipeline(spark, d, g)
+    assert ivf_calls
     mb = out_b["matches"].select("doc_id", "uprn").toPandas() \
         .sort_values("doc_id").reset_index(drop=True)
     mi = out_i["matches"].select("doc_id", "uprn").toPandas() \
