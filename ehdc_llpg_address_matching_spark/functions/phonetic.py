@@ -41,8 +41,3 @@ def phonetic_series(words: pd.Series) -> pd.Series:
     s = s.str.replace(r"(.)\1+", r"\1", regex=True)  # dedupe runs
     return s.str.slice(0, CODE_LEN)
 
-
-def phonetic_code(word: str) -> str:
-    """Scalar convenience for tests."""
-    return phonetic_series(pd.Series([word])).iloc[0]
-

@@ -55,9 +55,21 @@ def with_blocking_keys(df: DataFrame,
 
 
 def explode_keys(df: DataFrame, id_cols: list[str]) -> DataFrame:
-    """(id..., block_kind, block_key) — one row per (record, key)."""
+    """(id..., block_kind, block_key) — one row per (record, key);
+    a record with a null or empty block_keys gives no row.
+
+    explode_outer plus a null filter on the generated column, not a
+    plain explode: from explode, Catalyst infers size(block_keys) > 0
+    and pushes that filter below the projections that compute
+    block_keys. Over a frame that is normalized but not materialized
+    (a streamed micro-batch) the pushed filter is rewritten in terms of
+    the normalization UDF, which then runs twice per record: once
+    under the filter, once above it. Nothing is inferred from
+    explode_outer, and a filter on bk cannot move below the Generate
+    that makes bk."""
     return (df
-            .select(*id_cols, F.explode("block_keys").alias("bk"))
+            .select(*id_cols, F.explode_outer("block_keys").alias("bk"))
+            .filter(F.col("bk").isNotNull())
             .select(*id_cols,
                     F.col("bk.kind").alias("block_kind"),
                     F.col("bk.key").alias("block_key")))

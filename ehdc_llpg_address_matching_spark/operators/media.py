@@ -1,5 +1,5 @@
-"""Multimodal column operators: decode / feature-extract / resize /
-frame-sample over opaque binary or media_ref columns.
+"""Multimodal column operators: decode / resize planning over opaque
+binary or media_ref columns.
 
 Pixel decode is REAL code behind an optional pillow import
 (`decode_image` / `with_pixel_stats`): where PIL is installed the
@@ -7,8 +7,8 @@ operator decodes and measures actual pixels; in this pixel-less
 sandbox it emits px_ok=False rows (never fake pixels) and the
 NotImplementedError stub is reachable ONLY when PIL is absent. Header
 METADATA parsing (`parse_image_header`) is pure-python and real
-everywhere. The remaining deterministic stand-ins (`_decode_fake` for
-ref-only rows, the hash feature vector) are clearly marked.
+everywhere. The remaining deterministic stand-in (`_decode_fake` for
+ref-only rows) is clearly marked.
 
 Media rides through the linkage pipeline untouched inside the spans
 array (the per-row invariant); these operators act on the exploded
@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, functions as F
 
 MEDIA_META_SCHEMA = ("width int, height int, n_channels int, "
                      "format string, ok boolean")
-FEATURE_DIM = 32
 
 try:  # real pixel decode when pillow is installed (deployment path)
     from PIL import Image as _PILImage
@@ -229,32 +228,6 @@ def with_synth_image_bytes(media: DataFrame,
     return media.withColumn(out_col, _gen(F.col(ref_col)))
 
 
-def with_media_features(media: DataFrame, ref_col: str = "media_ref",
-                        dim: int = FEATURE_DIM) -> DataFrame:
-    """Adds a deterministic feature vector per media item (stand-in for
-    a CNN/CLIP embedding; real impl swaps the hash for a model forward
-    pass on the decoded tensor). Arrow-batched."""
-    def run(it):
-        for pdf in it:
-            refs = pdf[ref_col].fillna("").to_numpy()
-            feats = np.zeros((len(refs), dim), dtype=np.float32)
-            for i, r in enumerate(refs):
-                if not r:
-                    continue
-                seed = int.from_bytes(
-                    hashlib.md5(r.encode()).digest()[:8], "little") % (2**32)
-                feats[i] = np.random.RandomState(seed).standard_normal(dim)
-            n = np.linalg.norm(feats, axis=1, keepdims=True)
-            feats = feats / np.maximum(n, 1e-12)
-            out = pdf.reset_index(drop=True)
-            out["media_embedding"] = [row.tolist() for row in feats]
-            yield out
-
-    schema = ", ".join(f"{n} {t}" for n, t in media.dtypes) + \
-        ", media_embedding array<float>"
-    return media.mapInPandas(run, schema=schema)
-
-
 def resize_spec(media: DataFrame, target_w: int = 224,
                 target_h: int = 224) -> DataFrame:
     """Resize planning as column math on decoded metadata (scale factor,
@@ -271,18 +244,3 @@ def resize_spec(media: DataFrame, target_w: int = 224,
                         F.round(F.col("height") * scale).cast("int"))
             .withColumn("pad_x", (F.lit(target_w) - F.col("resized_w")) / 2)
             .withColumn("pad_y", (F.lit(target_h) - F.col("resized_h")) / 2))
-
-
-def frame_sample_plan(media: DataFrame, every_n: int = 30,
-                      max_frames: int = 8) -> DataFrame:
-    """Frame-sampling plan for video refs: frame indices as an exploded
-    column (sequence/explode — no UDF). Fake duration derives from the
-    metadata width (deterministic stand-in for container probing)."""
-    n_frames = F.least(F.lit(max_frames),
-                       F.greatest((F.col("width") * 4) / every_n, F.lit(1))
-                       .cast("int"))
-    return (media
-            .withColumn("frame_idx",
-                        F.explode(F.sequence(
-                            F.lit(0), (n_frames - 1) * every_n,
-                            F.lit(every_n)))))

@@ -44,10 +44,3 @@ def plan_report(df: DataFrame) -> dict:
         "pushed_filters": len(re.findall(r"PushedFilters: \[[^\]]", p)),
     }
 
-
-def scan_read_schema(df: DataFrame) -> list[str]:
-    """ReadSchema column lists of every file scan in the plan — the
-    column-pruning check (a scan reading all columns for a narrow
-    projection is a bug)."""
-    p = physical_plan(df)
-    return re.findall(r"ReadSchema: struct<([^>]*)>", p)

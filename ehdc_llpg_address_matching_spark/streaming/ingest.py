@@ -9,13 +9,18 @@ broadcast gazetteer artifacts and appended to the matches table —
 incremental linkage with exactly-once sink semantics when the sink is
 Iceberg (append + checkpointLocation).
 
-Also: watermarked windowed event aggregation over an event stream
-(the shape a metrics/audit stream needs).
+Also a continuous front end, stream_static_candidates: per micro-batch
+the fused normalization Arrow UDF runs once over the batch's documents,
+AQE broadcasts that small document side, and the prepared gazetteer's
+key index streams through the broadcast join.
 """
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from ..sources.documents import DOCUMENTS_SCHEMA
 
@@ -38,14 +43,16 @@ def start_incremental_linkage(stream: DataFrame, gaz: DataFrame,
     materialized, not a lazy plan replayed per batch) and the closure
     hands the prepared frame, the stream's one pin, to every micro-batch
     run. Each batch releases its own run's checkpoints after its write,
-    so the pinned storage does not grow with the number of batches."""
+    so the pinned storage does not grow with the number of batches, and
+    the gazetteer pin is released when the query terminates (stopped,
+    drained or failed)."""
     from ..operators import candidates as C
     from ..pipeline import PipelineConfig, run_pipeline
     from ..session import Pins
     cfg = cfg or PipelineConfig(enable_vector=False, enable_spatial=False,
                                 enable_symspell=False)
-    inner = Pins(gaz)
-    gazp = inner.adopt(C.prepare_gazetteer(gaz)).localCheckpoint(eager=True)
+    inner, pin = Pins(gaz), Pins(gaz)
+    gazp = pin.checkpoint(inner.adopt(C.prepare_gazetteer(gaz)))
     inner.release()  # prepare_gazetteer's own cut, now unread under gazp
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -65,7 +72,48 @@ def start_incremental_linkage(stream: DataFrame, gaz: DataFrame,
          .option("checkpointLocation", checkpoint))
     if available_now:
         w = w.trigger(availableNow=True)
-    return w.start()
+    streams = stream.sparkSession.streams
+    listener = _ReleaseOnTermination(streams, pin)
+    streams.addListener(listener)
+    try:
+        q = w.start()
+    except Exception:
+        listener.watch(None)
+        streams.removeListener(listener)
+        pin.release()
+        raise
+    listener.watch(q.runId)
+    return q
+
+
+class _ReleaseOnTermination(StreamingQueryListener):
+    """Releases a query's pins on its QueryTerminatedEvent, then
+    deregisters itself. The event is delivered on the listener bus, so
+    the release follows awaitTermination by the bus's lag, not by
+    garbage collection. It is registered before start (a later
+    registration could miss the event of a query that ends at once) and
+    waits in onQueryTerminated until start has returned the run id."""
+
+    def __init__(self, streams, pins):
+        self._streams, self._pins = streams, pins
+        self._run_id = None
+        self._started = threading.Event()
+
+    def watch(self, run_id: str | None) -> None:
+        self._run_id = run_id
+        self._started.set()
+
+    def onQueryStarted(self, event) -> None:
+        pass
+
+    def onQueryProgress(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        self._started.wait()
+        if str(event.runId) == self._run_id:
+            self._pins.release()
+            self._streams.removeListener(self)
 
 
 def stream_static_candidates(stream_docs: DataFrame,
@@ -73,10 +121,12 @@ def stream_static_candidates(stream_docs: DataFrame,
     """CONTINUOUS (non-foreachBatch) linkage front end: normalize the
     document stream with the same stateless Arrow UDFs the batch path
     uses, derive blocking keys, and stream-static inner-join against
-    the prepared gazetteer's exploded key index. Spark keeps the static
-    side as a plain batch relation (re-broadcast per micro-batch under
-    AQE), the stream side never accumulates state — this is the
-    always-on candidate generator in front of the scoring phase.
+    the prepared gazetteer's exploded key index. The plan evaluates the
+    fused normalization UDF once per document (explode_keys keeps
+    Catalyst from cloning it into a pushed filter). Per micro-batch AQE
+    broadcasts the small document side and streams the gazetteer scan
+    through the join; the stream side never accumulates state — this
+    is the always-on candidate generator in front of the scoring phase.
 
     Returns a STREAMING DataFrame (doc_id, addr_can, postcode, uprn,
     block_kind) — exact-canonical agreement collapses to method
@@ -132,18 +182,3 @@ def streaming_dedup(stream: DataFrame, fingerprint_col: str = "fingerprint",
                 stateStructType=state_schema,
                 outputMode="append",
                 timeoutConf=GroupStateTimeout.NoTimeout))
-
-
-def windowed_event_counts(events: DataFrame, ts_col: str = "ts",
-                          window: str = "1 minute",
-                          watermark: str = "5 minutes") -> DataFrame:
-    """Watermarked tumbling-window counts by event_type — late data
-    beyond the watermark is dropped, state is bounded."""
-    return (events
-            .withWatermark(ts_col, watermark)
-            .groupBy(F.window(F.col(ts_col), window).alias("w"),
-                     F.col("event_type"))
-            .agg(F.count("*").alias("n"),
-                 F.avg("value").alias("avg_value"))
-            .select(F.col("w.start").alias("window_start"),
-                    "event_type", "n", "avg_value"))

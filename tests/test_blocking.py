@@ -28,6 +28,25 @@ def test_blocking_keys_null_safe(spark):
     assert df.select(F.size("block_keys")).collect()[0][0] == 0
 
 
+def test_explode_keys_contract(spark):
+    """Keyed rows give the multiset of a plain explode; a row whose
+    block_keys is empty or NULL gives no row."""
+    df = _keyed(spark, [
+        ("a", "GU34 1AA", "HK", "ALTON", ["HIGH", "STREET", "ALTON"]),
+        ("b", "GU34 1AB", "HK", "ALTON", ["HIGH", "STREET"]),
+        ("c", "GU35 0XY", "", None, ["MILL"]),
+        ("e", None, "", None, []),
+    ]).unionByName(spark.createDataFrame(
+        [("n", None)], "id string, block_keys "
+        "array<struct<kind:string,key:string>>"), allowMissingColumns=True)
+    got = sorted(tuple(r) for r in explode_keys(df, ["id"]).collect())
+    plain = (df.select("id", F.explode("block_keys").alias("bk"))
+             .select("id", "bk.kind", "bk.key"))
+    assert got == sorted(tuple(r) for r in plain.collect())
+    assert {r[0] for r in got} == {"a", "b", "c"}
+    assert len(got) == 3 + 3 + 1
+
+
 def test_salting_preserves_pairs(spark):
     # 1 hot key (H) above threshold, 1 cold key (C): every (doc, gaz)
     # pair co-keyed pre-salt must still meet exactly once post-salt.

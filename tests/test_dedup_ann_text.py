@@ -202,24 +202,9 @@ def test_media_pipeline_plumbing(spark):
     rows = meta.toPandas().set_index("doc_id")
     assert (rows["ok"]).all()
     assert (rows["width"] > 0).all()
-    feats = media.with_media_features(df).toPandas()
-    assert all(len(v) == media.FEATURE_DIM for v in feats["media_embedding"])
-    # determinism
-    feats2 = media.with_media_features(df).toPandas()
-    assert np.allclose(np.array(feats["media_embedding"].to_list()),
-                       np.array(feats2["media_embedding"].to_list()))
     resized = media.resize_spec(meta).toPandas()
     assert (resized["resized_w"] <= 224).all()
     assert (resized["resized_h"] <= 224).all()
-
-
-def test_frame_sample_plan(spark):
-    df = spark.createDataFrame([("d1", "video", "media://v/1.mp4", 0)],
-                               "doc_id string, kind string, media_ref string, offset int")
-    meta = media.with_media_metadata(df)
-    plan = media.frame_sample_plan(meta).toPandas()
-    assert len(plan) >= 1
-    assert (plan["frame_idx"] % 30 == 0).all()
 
 
 def test_near_dup_clusters_transitive(spark):

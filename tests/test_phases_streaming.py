@@ -13,7 +13,7 @@ from ehdc_llpg_address_matching_spark.pipeline import PipelineConfig
 from ehdc_llpg_address_matching_spark.plans.phases import run_phased
 from ehdc_llpg_address_matching_spark.sources.catalog import Warehouse
 from ehdc_llpg_address_matching_spark.streaming.ingest import (
-    read_document_stream, start_incremental_linkage, windowed_event_counts)
+    read_document_stream, start_incremental_linkage)
 from ehdc_llpg_address_matching_spark.synth import (SynthConfig,
                                                     synth_spark_tables,
                                                     synth_tables)
@@ -90,18 +90,30 @@ def test_streaming_incremental_linkage(spark, tmp_path, corpus):
     assert res.count() >= 50
     assert "batch_id" in res.columns
     assert res.select("batch_id").distinct().count() == 2
-    # each batch releases its run's checkpoints: only the gazetteer
-    # prepared at stream start stays pinned, one checkpoint, however
-    # many batches.
-    # "-", not "==": the ContextCleaner may drop unrelated RDDs meanwhile
-    grown = set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) \
-        - pinned
-    assert len(grown) <= 1, grown
+    # each batch releases its run's checkpoints after its write, and
+    # the gazetteer prepared at stream start is released when the query
+    # terminates: nothing stays pinned, however many batches ran
+    _assert_no_pin_growth(spark, pinned)
     # exactly-once-ish: rerunning with the same checkpoint adds nothing
     q2 = start_incremental_linkage(read_document_stream(spark, src),
                                    gaz, out, chk, cfg=CFG)
     q2.awaitTermination(60)
     assert spark.read.parquet(out).count() == res.count()
+    _assert_no_pin_growth(spark, pinned)
+
+
+def _assert_no_pin_growth(spark, pinned, wait_s=30.0):
+    """No persisted RDD beyond ``pinned`` remains. The query's release
+    runs on the listener bus after awaitTermination returns, so wait
+    for it up to ``wait_s``. "-", not "==": the ContextCleaner may drop
+    unrelated RDDs meanwhile."""
+    def grown():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) \
+            - pinned
+    deadline = time.monotonic() + wait_s
+    while grown() and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert not grown(), grown()
 
 
 def test_streaming_keeps_side_channel_columns(spark, tmp_path, corpus):
@@ -128,32 +140,6 @@ def test_streaming_keeps_side_channel_columns(spark, tmp_path, corpus):
     batch["release"]()
     assert rows(streamed) == want
     assert any(m == "legacy_uprn" for _, _, m in want)
-
-
-def test_windowed_event_counts_streaming_mode(spark, tmp_path):
-    src = str(tmp_path / "events_in")
-    spark.createDataFrame(
-        [(1, "2024-01-01 00:00:30", "click", 1.0),
-         (2, "2024-01-01 00:00:45", "click", 3.0),
-         (3, "2024-01-01 00:02:10", "view", 5.0)],
-        "event_id long, ts string, event_type string, value double") \
-        .withColumn("ts", F.col("ts").cast("timestamp")) \
-        .write.parquet(src)
-    stream = (spark.readStream
-              .schema("event_id long, ts timestamp, event_type string, value double")
-              .parquet(src))
-    agg = windowed_event_counts(stream)
-    q = (agg.writeStream.format("memory").queryName("evt")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    # append mode only emits windows the watermark has passed; with a
-    # finite source the final window stays open, so just check schema +
-    # no crash and the complete-mode batch equivalent
-    batch = windowed_event_counts(spark.read.parquet(src))
-    rows = {(str(r["window_start"]), r["event_type"]): r["n"]
-            for r in batch.collect()}
-    assert rows[("2024-01-01 00:00:00", "click")] == 2
-    assert rows[("2024-01-01 00:02:00", "view")] == 1
 
 
 def test_streaming_stateful_dedup(spark, tmp_path):
@@ -229,6 +215,44 @@ def test_stream_static_candidate_join(spark, tmp_path, corpus):
     missing = (doc_ids & matchable) - covered
     assert not missing, f"stream candidates missed {missing}"
     assert n_docs_with_cand > 0
+
+
+def _arrow_evals(plan: str) -> int:
+    """ArrowEvalPython nodes in a physical plan's text, final plan
+    only: an executed adaptive plan prints its final and initial plans."""
+    return plan.split("== Initial Plan ==")[0].count("ArrowEvalPython")
+
+
+def test_stream_static_candidates_normalize_once(spark, tmp_path, corpus):
+    """The fused normalization UDF runs once per document: one
+    ArrowEvalPython in stream_static_candidates' plan, over a batch
+    parquet frame and in a real micro-batch's last execution. (A
+    blocking-key explode that lets Catalyst push size(block_keys) > 0
+    below the normalized projections clones the UDF into that filter.)"""
+    from ehdc_llpg_address_matching_spark.operators.candidates import \
+        prepare_gazetteer
+    from ehdc_llpg_address_matching_spark.session import Pins
+    from ehdc_llpg_address_matching_spark.streaming.ingest import \
+        stream_static_candidates
+
+    docs, gaz, _ = corpus
+    src = str(tmp_path / "once_src")
+    docs.limit(40).write.parquet(src)
+    pins = Pins(gaz)
+    gazp = pins.checkpoint(pins.adopt(prepare_gazetteer(gaz)))
+    batch = stream_static_candidates(spark.read.parquet(src), gazp)
+    assert _arrow_evals(
+        batch._jdf.queryExecution().executedPlan().toString()) == 1
+    q = (stream_static_candidates(read_document_stream(spark, src), gazp)
+         .writeStream.format("parquet")
+         .option("path", str(tmp_path / "once_out"))
+         .option("checkpointLocation", str(tmp_path / "once_chk"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    pins.release()
+    assert "== Final Plan ==" in plan
+    assert _arrow_evals(plan) == 1
 
 
 @pytest.mark.parametrize(

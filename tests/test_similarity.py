@@ -11,7 +11,7 @@ from ehdc_llpg_address_matching_spark.functions.similarity import (
     _trigram_set)
 from ehdc_llpg_address_matching_spark.functions.symspell import (
     SymSpell, damerau_levenshtein)
-from ehdc_llpg_address_matching_spark.functions.phonetic import phonetic_code
+from ehdc_llpg_address_matching_spark.functions.phonetic import phonetic_series
 
 
 def _naive_lev(a, b):
@@ -92,12 +92,13 @@ def test_symspell_corrects_typo():
 
 
 def test_phonetic_stability():
-    # same word -> same code; suffix-insensitive-ish
-    assert phonetic_code("CHURCH") == phonetic_code("CHURCH")
-    assert phonetic_code("church") == phonetic_code("CHURCH")
-    assert phonetic_code("") == ""
+    code = phonetic_series(pd.Series(
+        ["CHURCH", "CHURCH", "church", "", "PHILIP", "FILIP"])).tolist()
+    # same word -> same code, case-insensitive
+    assert code[0] == code[1] == code[2]
+    assert code[3] == ""
     # digraph folding
-    assert phonetic_code("PHILIP") == phonetic_code("FILIP")
+    assert code[4] == code[5]
 
 
 def test_jaro_winkler_known_values():

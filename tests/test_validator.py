@@ -3,10 +3,11 @@ reference internal/validation/validator_test.go:8-254): the house-number
 exact-match-mandatory rule and street abbreviation acceptance, exercised
 through the real scoring+decision operators on 1-pair DataFrames."""
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from ehdc_llpg_address_matching_spark.functions.phonetic import phonetic_code
+from ehdc_llpg_address_matching_spark.functions.phonetic import phonetic_series
 from ehdc_llpg_address_matching_spark.functions.similarity import \
     trigram_grams_expr
 from ehdc_llpg_address_matching_spark.operators import decision as D
@@ -19,6 +20,8 @@ def _decide_pair(spark, d_house, g_house, d_street, g_street,
     pipeline order."""
     d_core = f"{d_house} {d_street} {locality}".strip()
     g_core = f"{g_house} {g_street} {locality}".strip()
+    d_phon, g_phon = phonetic_series(pd.Series(
+        [d_street.split()[0], g_street.split()[0]])).tolist()
     row = {
         "addr_id": "a1", "uprn": "u1", "methods": ["blocked_fuzzy"],
         "d_core": d_core, "g_core": g_core,
@@ -29,8 +32,7 @@ def _decide_pair(spark, d_house, g_house, d_street, g_street,
         "d_house": d_house, "g_house": g_house,
         "d_street": d_street, "g_street": g_street,
         "d_locality": locality, "g_locality": locality,
-        "d_phon": phonetic_code(d_street.split()[0]),
-        "g_phon": phonetic_code(g_street.split()[0]),
+        "d_phon": d_phon, "g_phon": g_phon,
         "d_vague": False, "d_e": None, "d_n": None,
         "g_e": None, "g_n": None,
         "g_status": "1", "g_source_type": "original",
