@@ -15,7 +15,19 @@ from pyspark.sql import DataFrame
 
 
 def physical_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+    """The physical plan's text, the adaptive plan's final plan only
+    (its current plan before it has run). An executed
+    AdaptiveSparkPlan prints its final and its initial plan, which
+    would count every node twice."""
+    return final_plan(df._jdf.queryExecution().executedPlan())
+
+
+def final_plan(jplan) -> str:
+    """``physical_plan`` of a JVM SparkPlan, such as a streaming
+    query's ``lastExecution().executedPlan()``."""
+    if jplan.nodeName() == "AdaptiveSparkPlan":
+        jplan = jplan.executedPlan()
+    return jplan.toString()
 
 
 def formatted_plan(df: DataFrame) -> str:

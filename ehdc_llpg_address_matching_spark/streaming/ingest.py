@@ -9,20 +9,43 @@ broadcast gazetteer artifacts and appended to the matches table —
 incremental linkage with exactly-once sink semantics when the sink is
 Iceberg (append + checkpointLocation).
 
-Also a continuous front end, stream_static_candidates: per micro-batch
-the fused normalization Arrow UDF runs once over the batch's documents,
-AQE broadcasts that small document side, and the prepared gazetteer's
-key index streams through the broadcast join.
+Also a continuous front end, stream_static_candidates: the prepared
+gazetteer's blocking-key index (uprn, block_kind, block_key) is routed
+once, when the query is defined, by its size against
+spark.sql.autoBroadcastJoinThreshold:
+
+  index — at most threshold // KEY_ROW_BYTES key rows: the index is
+      collected to the driver (at most one row past that cap) and
+      broadcast as a KeyIndex. Each micro-batch is one job and one
+      stage: scan, the fused normalization Arrow UDF, the blocking
+      keys, one mapInPandas probe of the index, the sink. No exchange,
+      no per-batch build of a join relation.
+  join — the index overflows the cap, or the threshold is -1: a
+      stream-static inner join on (block_kind, block_key) against the
+      gazetteer's keys, exploded in every micro-batch.
+
+The broadcast index lives as long as the plan that holds it (the
+returned frame and the query running it), one copy per Python worker.
+It is not a Pins entry: nothing to release, and Spark's ContextCleaner
+drops it once the query and the frame are gone.
 """
 
 from __future__ import annotations
 
 import threading
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
 from ..sources.documents import DOCUMENTS_SCHEMA
+
+# Bytes one (uprn, block_kind, block_key) key row may take, for the
+# index route's size rule: its collected pandas row on the driver,
+# ~200 B, the largest of its copies (unpickled in a Python worker it
+# is ~90-130 B, the uprn strings shared by their kinds' lists).
+KEY_ROW_BYTES = 200
 
 
 def read_document_stream(spark: SparkSession, path: str,
@@ -116,33 +139,87 @@ class _ReleaseOnTermination(StreamingQueryListener):
             self._streams.removeListener(self)
 
 
+class KeyIndex:
+    """The prepared gazetteer's blocking-key index, probed in Python:
+    per block_kind, the distinct keys and the list of uprns that carry
+    each. Built on the driver from collected (uprn, block_kind,
+    block_key) rows. groupby drops null kinds and keys, so a probe
+    never matches a null key, as an inner join never does."""
+
+    def __init__(self, rows: pd.DataFrame):
+        self.kinds = {}
+        for kind, g in rows.groupby("block_kind"):
+            uprns = g.groupby("block_key")["uprn"].agg(list)
+            self.kinds[kind] = (uprns.index, uprns.to_numpy())
+
+    def probe(self, keys: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+        """(row, uprns): each row of ``keys`` whose (block_kind,
+        block_key) is indexed, with the list of its uprns. Exploded,
+        that is the inner join's multiset."""
+        kind = keys["block_kind"].to_numpy()
+        key = keys["block_key"].to_numpy()
+        rows, uprns = [np.zeros(0, np.int64)], [np.zeros(0, object)]
+        for k, (index, lists) in self.kinds.items():
+            sel = np.flatnonzero(kind == k)
+            pos = index.get_indexer(key[sel])
+            rows.append(sel[pos >= 0])
+            uprns.append(lists[pos[pos >= 0]])
+        return np.concatenate(rows), np.concatenate(uprns)
+
+
 def stream_static_candidates(stream_docs: DataFrame,
                              gazp: DataFrame) -> DataFrame:
     """CONTINUOUS (non-foreachBatch) linkage front end: normalize the
     document stream with the same stateless Arrow UDFs the batch path
-    uses, derive blocking keys, and stream-static inner-join against
-    the prepared gazetteer's exploded key index. The plan evaluates the
-    fused normalization UDF once per document (explode_keys keeps
-    Catalyst from cloning it into a pushed filter). Per micro-batch AQE
-    broadcasts the small document side and streams the gazetteer scan
-    through the join; the stream side never accumulates state — this
-    is the always-on candidate generator in front of the scoring phase.
+    uses, derive blocking keys, and match them against the prepared
+    gazetteer's exploded key index on (block_kind, block_key). The
+    fused normalization UDF runs once per document (explode_keys keeps
+    Catalyst from cloning it into a pushed filter), and the stream side
+    never accumulates state: this is the always-on candidate generator
+    in front of the scoring phase.
+
+    The route is chosen here, once, by the index's size (module
+    docstring): while it has at most threshold // KEY_ROW_BYTES rows it
+    is collected and broadcast, and every micro-batch probes it in one
+    mapInPandas pass, one job per batch; otherwise, or when
+    spark.sql.autoBroadcastJoinThreshold is -1, every micro-batch runs
+    the stream-static inner join. Both routes give the same rows.
 
     Returns a STREAMING DataFrame (doc_id, addr_can, postcode, uprn,
-    block_kind) — exact-canonical agreement collapses to method
-    'exact'; everything else is a blocked fuzzy candidate for the
-    downstream scorer."""
+    block_kind), one row per (document key, gazetteer key row) pair
+    that agrees: a document meets a uprn once per key they share. No
+    dropDuplicates: on a stream it would pin unbounded state, and the
+    scoring phase's (addr, uprn) groupBy collapses multi-key hits."""
     from ..operators.blocking import explode_keys, with_blocking_keys
     from ..pipeline import normalize_documents
 
     d = normalize_documents(stream_docs, None)
     d = with_blocking_keys(d)
-    dk = explode_keys(d, ["doc_id", "addr_can", "postcode", "addr_core"])
-    gk = explode_keys(gazp, ["uprn"]) \
-        .withColumnRenamed("block_kind", "g_kind") \
-        .withColumnRenamed("block_key", "g_key")
-    # NO dropDuplicates here: on a stream it would pin unbounded state;
-    # the scoring phase's (addr, uprn) groupBy collapses multi-key hits
+    cols = ["doc_id", "addr_can", "postcode"]
+    dk = explode_keys(d, cols)
+    gk = explode_keys(gazp, ["uprn"])
+    spark = gazp.sparkSession
+    cap = (spark._jsparkSession.sessionState().conf()
+           .autoBroadcastJoinThreshold()) // KEY_ROW_BYTES
+    rows = gk.limit(cap + 1).toPandas() if cap > 0 else None
+    if rows is not None and len(rows) <= cap:
+        b_index = spark.sparkContext.broadcast(KeyIndex(rows))
+        out = cols + ["block_kind"]
+
+        def probe(it):
+            index = b_index.value
+            for pdf in it:
+                row, uprns = index.probe(pdf)
+                yield pdf[out].iloc[row].assign(uprns=uprns)
+
+        uprn = gazp.schema["uprn"].dataType.simpleString()
+        return (dk.mapInPandas(probe, f"doc_id string, addr_can string, "
+                               f"postcode string, block_kind string, "
+                               f"uprns array<{uprn}>")
+                .select(*cols, F.explode("uprns").alias("uprn"),
+                        "block_kind"))
+    gk = (gk.withColumnRenamed("block_kind", "g_kind")
+          .withColumnRenamed("block_key", "g_key"))
     return (dk.join(gk, (dk.block_kind == gk.g_kind) &
                     (dk.block_key == gk.g_key), "inner")
             .select("doc_id", "addr_can", "postcode", "uprn", "block_kind"))

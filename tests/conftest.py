@@ -15,12 +15,25 @@ def spark():
 
 
 @pytest.fixture
-def ivf_route(spark, monkeypatch):
+def broadcast_off(spark):
+    """autoBroadcastJoinThreshold -1, restored afterwards: the size
+    routes (cand_vector, stream_static_candidates) take their unbounded
+    route. Request it with request.getfixturevalue to switch the route
+    mid-test, after a baseline on the default route."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    yield
+    spark.conf.set(key, old)
+
+
+@pytest.fixture
+def ivf_route(broadcast_off, monkeypatch):
     """Send cand_vector down its IVF route and make that route exact:
-    broadcast off (autoBroadcastJoinThreshold -1, restored afterwards)
-    and every cell probed. Yields the list each ann.ivf_topk call
-    appends to. Request it with request.getfixturevalue to switch the
-    route mid-test, after a broadcast baseline."""
+    broadcast off and every cell probed. Yields the list each
+    ann.ivf_topk call appends to. Request it with
+    request.getfixturevalue to switch the route mid-test, after a
+    broadcast baseline."""
     from ehdc_llpg_address_matching_spark.operators import ann
     from ehdc_llpg_address_matching_spark.operators import candidates as C
     calls, ivf_topk = [], ann.ivf_topk
@@ -31,8 +44,4 @@ def ivf_route(spark, monkeypatch):
 
     monkeypatch.setattr(ann, "ivf_topk", counted)
     monkeypatch.setattr(C, "IVF_PROBE", C.IVF_CELLS)
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "-1")
     yield calls
-    spark.conf.set(key, old)

@@ -182,13 +182,15 @@ def test_stream_static_candidate_join(spark, tmp_path, corpus):
     produce candidates covering the batch path's exact hits."""
     from ehdc_llpg_address_matching_spark.operators.candidates import \
         prepare_gazetteer
+    from ehdc_llpg_address_matching_spark.session import Pins
     from ehdc_llpg_address_matching_spark.streaming.ingest import \
         stream_static_candidates
 
     docs, gaz, gold = corpus
     src = str(tmp_path / "stream_src")
     docs.limit(40).write.parquet(src)
-    gazp = prepare_gazetteer(gaz).cache()
+    pins = Pins(gaz)
+    gazp = pins.checkpoint(pins.adopt(prepare_gazetteer(gaz)))
     stream = read_document_stream(spark, src, max_files_per_trigger=2)
     assert stream.isStreaming
     cand = stream_static_candidates(stream, gazp)
@@ -199,6 +201,7 @@ def test_stream_static_candidate_join(spark, tmp_path, corpus):
          .option("checkpointLocation", str(tmp_path / "ckpt_cand"))
          .trigger(availableNow=True).start())
     q.awaitTermination(120)
+    pins.release()
     got = spark.read.parquet(out)
     n_docs_with_cand = got.select("doc_id").distinct().count()
     # every directly-matchable doc must surface at least one candidate
@@ -217,20 +220,18 @@ def test_stream_static_candidate_join(spark, tmp_path, corpus):
     assert n_docs_with_cand > 0
 
 
-def _arrow_evals(plan: str) -> int:
-    """ArrowEvalPython nodes in a physical plan's text, final plan
-    only: an executed adaptive plan prints its final and initial plans."""
-    return plan.split("== Initial Plan ==")[0].count("ArrowEvalPython")
-
-
 def test_stream_static_candidates_normalize_once(spark, tmp_path, corpus):
     """The fused normalization UDF runs once per document: one
     ArrowEvalPython in stream_static_candidates' plan, over a batch
     parquet frame and in a real micro-batch's last execution. (A
     blocking-key explode that lets Catalyst push size(block_keys) > 0
-    below the normalized projections clones the UDF into that filter.)"""
+    below the normalized projections clones the UDF into that filter.)
+    On the index route the micro-batch is one job: no exchange of any
+    kind, so no broadcast relation is rebuilt per batch."""
     from ehdc_llpg_address_matching_spark.operators.candidates import \
         prepare_gazetteer
+    from ehdc_llpg_address_matching_spark.plans.inspect import (
+        final_plan, physical_plan)
     from ehdc_llpg_address_matching_spark.session import Pins
     from ehdc_llpg_address_matching_spark.streaming.ingest import \
         stream_static_candidates
@@ -241,18 +242,145 @@ def test_stream_static_candidates_normalize_once(spark, tmp_path, corpus):
     pins = Pins(gaz)
     gazp = pins.checkpoint(pins.adopt(prepare_gazetteer(gaz)))
     batch = stream_static_candidates(spark.read.parquet(src), gazp)
-    assert _arrow_evals(
-        batch._jdf.queryExecution().executedPlan().toString()) == 1
+    assert physical_plan(batch).count("ArrowEvalPython") == 1
     q = (stream_static_candidates(read_document_stream(spark, src), gazp)
          .writeStream.format("parquet")
          .option("path", str(tmp_path / "once_out"))
          .option("checkpointLocation", str(tmp_path / "once_chk"))
          .trigger(availableNow=True).start())
     q.awaitTermination(120)
-    plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    plan = final_plan(q._jsq.streamingQuery().lastExecution().executedPlan())
     pins.release()
-    assert "== Final Plan ==" in plan
-    assert _arrow_evals(plan) == 1
+    assert plan.count("ArrowEvalPython") == 1
+    assert plan.count("Exchange") == 0  # no BroadcastExchange, no shuffle
+    assert "MapInPandas" in plan
+
+
+_CAND_COLS = ["doc_id", "addr_can", "postcode", "uprn", "block_kind"]
+
+
+def _sorted_rows(df):
+    return (df.toPandas().sort_values(_CAND_COLS, ignore_index=True)
+            [_CAND_COLS])
+
+
+def _drain(frame, tmp_path, name):
+    """Run a streaming candidate frame to its end into a parquet sink;
+    returns (the query, the sink's rows sorted)."""
+    out = str(tmp_path / name)
+    q = (frame.writeStream.format("parquet").option("path", out)
+         .option("checkpointLocation", str(tmp_path / f"{name}_chk"))
+         .trigger(availableNow=True).start())
+    assert q.awaitTermination(120)
+    return q, _sorted_rows(frame.sparkSession.read.parquet(out))
+
+
+def test_stream_static_candidates_routes_agree(spark, tmp_path, corpus,
+                                               request):
+    """The index route (the gazetteer's key index collected once and
+    probed per micro-batch) and the stream-static join route
+    (autoBroadcastJoinThreshold -1) give the same rows, names and
+    types: over a batch parquet frame, and through a real 2-file
+    availableNow stream, one file per micro-batch."""
+    import pandas as pd
+
+    from ehdc_llpg_address_matching_spark.operators.candidates import \
+        prepare_gazetteer
+    from ehdc_llpg_address_matching_spark.plans.inspect import physical_plan
+    from ehdc_llpg_address_matching_spark.session import Pins
+    from ehdc_llpg_address_matching_spark.streaming.ingest import \
+        stream_static_candidates
+
+    docs, gaz, _ = corpus
+    src = str(tmp_path / "routes_src")
+    docs.limit(60).repartition(2).write.parquet(src)
+    assert len([n for n in os.listdir(src) if n.endswith(".parquet")]) == 2
+    pins = Pins(gaz)
+    gazp = pins.checkpoint(pins.adopt(prepare_gazetteer(gaz)))
+
+    def run(route):
+        batch = stream_static_candidates(spark.read.parquet(src), gazp)
+        assert route in physical_plan(batch)
+        q, streamed = _drain(stream_static_candidates(
+            read_document_stream(spark, src, max_files_per_trigger=1),
+            gazp), tmp_path, route)
+        assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 2
+        return batch.schema, _sorted_rows(batch), streamed
+
+    index = run("MapInPandas")
+    request.getfixturevalue("broadcast_off")
+    join = run("SortMergeJoin")
+    pins.release()
+    assert len(index[1]) > 0
+    assert [(f.name, f.dataType) for f in index[0]] == \
+        [(f.name, f.dataType) for f in join[0]]
+    for got in (index[1], index[2], join[2]):
+        pd.testing.assert_frame_equal(got, join[1])
+
+
+@pytest.mark.parametrize("route", ["index", "join"])
+def test_stream_static_candidates_keyless_batch(spark, tmp_path, corpus,
+                                                request, route):
+    """A micro-batch whose documents derive no blocking key (null,
+    empty, media-only and blank spans) gives no candidate row."""
+    from ehdc_llpg_address_matching_spark.operators.candidates import \
+        prepare_gazetteer
+    from ehdc_llpg_address_matching_spark.session import Pins
+    from ehdc_llpg_address_matching_spark.sources.documents import \
+        DOCUMENTS_SCHEMA
+    from ehdc_llpg_address_matching_spark.streaming.ingest import \
+        stream_static_candidates
+
+    if route == "join":
+        request.getfixturevalue("broadcast_off")
+    _, gaz, _ = corpus
+    src = str(tmp_path / "keyless_src")
+
+    def span(kind, text, ref):
+        return [{"kind": kind, "text": text, "media_ref": ref, "offset": 0}]
+
+    spark.createDataFrame(
+        [("K_null", None, None, None, None, None),
+         ("K_empty", [], None, None, None, None),
+         ("K_media", span("image", None, "img://1"), None, None, None, None),
+         ("K_blank", span("text", "   ", None), None, None, None, None)],
+        DOCUMENTS_SCHEMA).coalesce(1).write.parquet(src)
+    pins = Pins(gaz)
+    gazp = pins.checkpoint(pins.adopt(prepare_gazetteer(gaz)))
+    q, rows = _drain(stream_static_candidates(
+        read_document_stream(spark, src), gazp), tmp_path, "keyless")
+    pins.release()
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 4
+    assert len(rows) == 0
+
+
+def test_key_index_never_matches_null_key(spark):
+    """KeyIndex.probe pairs exactly what an inner join on (block_kind,
+    block_key) pairs: pandas.merge would pair a null key with a null
+    key, the join never does, on either side."""
+    import pandas as pd
+
+    from ehdc_llpg_address_matching_spark.streaming.ingest import KeyIndex
+
+    index = pd.DataFrame({
+        "uprn": ["u1", "u2", "u3", "u4", "u5"],
+        "block_kind": ["pc_sector", "pc_sector", "phon_loc", None,
+                       "pc_sector"],
+        "block_key": ["GU1 1", None, "GU1 1", "GU1 1", "GU1 1"]})
+    keys = pd.DataFrame({
+        "doc_id": ["d1", "d2", "d3", "d4"],
+        "block_kind": ["pc_sector", "pc_sector", None, "phon_loc"],
+        "block_key": ["GU1 1", None, "GU1 1", None]})
+    row, uprns = KeyIndex(index).probe(keys)
+    got = sorted((keys["doc_id"][r], u) for r, us in zip(row, uprns)
+                 for u in us)
+    assert got == [("d1", "u1"), ("d1", "u5")]
+    g = spark.createDataFrame(index, "uprn string, block_kind string, "
+                                     "block_key string")
+    d = spark.createDataFrame(keys, "doc_id string, block_kind string, "
+                                    "block_key string")
+    joined = d.join(g, ["block_kind", "block_key"]).select("doc_id", "uprn")
+    assert sorted(map(tuple, joined.collect())) == got
 
 
 @pytest.mark.parametrize(

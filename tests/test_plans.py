@@ -182,3 +182,28 @@ def test_lsh_ann_dedupe_shuffles_ids_only(spark):
         assert "vec" not in keys and "embedding" not in keys
     r = plan_report(lsh_topk(vecs, vecs, k=3, dim=16))
     assert r["nested_loop_joins"] == 0
+
+
+def test_plan_report_same_before_and_after_run(spark):
+    """An executed adaptive plan prints its final plan and its initial
+    plan; plan_report counts the final plan only, so running a frame
+    does not double its counts. (Codegen spans are the one count that
+    moves: AQE inserts them only when it plans the stages it runs.)"""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("long")
+    def plus_one(s: pd.Series) -> pd.Series:
+        return s + 1
+
+    left = spark.range(200).withColumn("v", plus_one("id"))
+    right = spark.range(50).withColumnRenamed("id", "k")
+    df = left.join(right, left.id == right.k)
+    before = plan_report(df)
+    assert before["broadcast_hash_joins"] == 1
+    assert before["arrow_evals"] == 1
+    assert len(df.collect()) == 50
+    after = plan_report(df)
+    assert before.pop("wholestage_codegen") == 0
+    assert after.pop("wholestage_codegen") > 0
+    assert after == before

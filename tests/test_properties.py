@@ -86,3 +86,43 @@ def test_token_cosine_bounds_and_identity(token_lists):
     ab = token_cosine_batch(a, b)
     ba = token_cosine_batch(b, a)
     assert (abs(ab - ba) < 1e-9).all()
+
+
+def _union_find_components(edges):
+    """Reference labeling: each node of a non-self edge -> the minimum
+    node id of its component (a node seen only in self-edges has no
+    edge, so no label)."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a == b:
+            continue
+        ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+# each path is a chain of edges; a one-node path is a self-edge, and
+# repeated or reversed steps give duplicate edges
+_paths = st.lists(st.lists(st.integers(0, 30).map(lambda i: f"n{i}"),
+                           min_size=1, max_size=8),
+                  min_size=1, max_size=8)
+
+
+@given(_paths)
+@settings(max_examples=12, deadline=None)
+def test_connected_components_match_union_find(spark, paths):
+    from ehdc_llpg_address_matching_spark.operators.cluster import \
+        connected_components
+    edges = [e for p in paths
+             for e in (zip(p, p[1:]) if len(p) > 1 else [(p[0], p[0])])]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    got = {r["node"]: r["component"]
+           for r in connected_components(df).collect()}
+    assert got == _union_find_components(edges)
