@@ -216,14 +216,19 @@ def trigram_sim_batch(a: pd.Series, b: pd.Series) -> np.ndarray:
 
 
 def trigram_grams_expr(col):
-    """JVM (whole-stage-codegen) mirror of _trigram_set: array<long> of
-    the DISTINCT xxhash64'd pg_trgm 3-grams of a string column — per
-    word, pad '  w ' and slide 3. Computed ONCE per side row (address /
-    gazetteer), so pair similarity becomes pure JVM set algebra via
-    trigram_sim_expr with no per-pair Python at all (the same
-    per-side-arrays trick operators/dedup.shingle_jaccard_verify_jvm
-    uses for 5-token shingles). Hashing is injective in practice:
-    64-bit space vs ~10^2 grams per address."""
+    """JVM mirror of _trigram_set: array<long> of the DISTINCT
+    xxhash64'd pg_trgm 3-grams of a string column — per word, pad
+    '  w ' and slide 3. Hashing is injective in practice: 64-bit space
+    vs ~10^2 grams per address.
+
+    Compute it once per SIDE row (address, gazetteer row or distinct
+    core) and let the arrays ride or re-attach by equi-join; never per
+    pair. Its nested higher-order functions are CodegenFallback
+    (interpreted, ~10-100x codegen's cost): per pair it was the J7 rule
+    matcher's dominant cost (round 6: 55 s over 57K pairs of the
+    20K-doc bench corpus, against ~1 s per side). trigram_sim_expr on
+    two arrays is then codegen set algebra (operators/dedup.
+    shingle_jaccard_verify_jvm does the same for 5-token shingles)."""
     from pyspark.sql import functions as F
     words = F.filter(F.split(F.coalesce(col, F.lit("")), " "),
                      lambda w: w != "")

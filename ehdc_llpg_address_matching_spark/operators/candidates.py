@@ -21,9 +21,10 @@ split + explicit salting) or a broadcast of the 72K-row gazetteer.
 from __future__ import annotations
 
 import pandas as pd  # module-level: pandas_udf type hints must resolve
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.normalize import norm_house_expr
+from ..functions.similarity import trigram_grams_expr, trigram_sim_expr
 from .blocking import explode_keys, salt_hot_keys, with_blocking_keys
 
 # reference guard, internal/llpg/range_expander.go:174: reject when
@@ -264,8 +265,6 @@ def cand_component_joins(uaddr: DataFrame, gazp: DataFrame,
     strict validator downstream enforces the house rule. Trigram
     verifies run in whole-stage codegen (trigram_sim_expr over hashed
     gram arrays — identical values to the Python kernel)."""
-    from ..functions.similarity import trigram_grams_expr, trigram_sim_expr
-
     nh = norm_house_expr
     opt = lambda df, c: (F.col(c) if c in df.columns
                          else F.lit("")).alias(c)
@@ -301,13 +300,8 @@ def cand_component_joins(uaddr: DataFrame, gazp: DataFrame,
     # A pair whose street typo changes the phonetic skeleton still
     # meets via the J3 blocked join; this strategy exists to catch
     # same-sounding misspellings with a confirmed house number.
-    # (c)/(d) trigram verifies: gram arrays are computed once per SIDE
-    # row (before the join fan-out) and ride the equi-join —
-    # trigram_grams_expr is interpreted (nested higher-order functions
-    # are CodegenFallback), so per-pair evaluation was measurably the
-    # strategy's dominant cost (round-6 profile); per-side arrays make
-    # the pair verify pure codegen set algebra, the same shape
-    # scoring.attach_pair_attrs already uses.
+    # (c)/(d) trigram verifies: gram arrays per side row, riding the
+    # equi-join (see trigram_grams_expr).
     c = (d.filter((F.col("d_st") != "") & (F.col("d_h") != "") &
                   (F.col("d_phon") != ""))
          .withColumn("_dsg", trigram_grams_expr(F.col("d_st")))
@@ -348,20 +342,29 @@ def cand_spatial(uaddr: DataFrame, gazp: DataFrame,
                  radius_m: float = 100.0) -> DataFrame:
     """J6 spatial proximity as a grid-cell range join (reference:
     internal/engine/spatial_matcher.go:158-248, ST_DWithin R=100m).
-    Cell = floor(coord/R); doc side explodes into its 3x3 neighborhood
-    so the join is a plain equi-join on the cell; exact Euclidean
-    filter afterwards. No custom Catalyst rule needed."""
+    A gazetteer row sits in cell floor(fl(coord/R)) per axis; the doc
+    explodes into floor(q - pad) .. floor(q + pad), q = fl(coord/R),
+    pad = 1 + (|q| + 2)·2^-48: 3 cells per axis, 4 near a boundary.
+    Equi-join on the cell, then the exact float filter dist² <= R².
+
+    Cover proof (u = 2^-53, |coord/R| < 2^48): an accepted pair has
+    fl(d)^2 <= fl(R·R) up to Math.pow's 1 ulp, so |x - y| <= R(1 + 4u)
+    and, with t = x/R, the gazetteer's fl(y/R) <= t + 1 + u(|t| + 6).
+    q >= t - u|t| and the <= 3 roundings in q + pad cost u(|q| + 2)
+    each, so pad - 1 >= 32u(|q| + 2)(1 - u) gives fl(q + pad) >=
+    fl(y/R); floor is monotone (the lower end is symmetric). A fixed
+    3x3 block misses doc (-1e-15, 0) vs gazetteer (100.0, 0) at
+    R = 100: dist² rounds to 10000, floor(-1e-17) = -1, floor(1.0) = 1."""
+    def cells(c):  # floor(q - pad) .. floor(q + pad) along one axis
+        q = F.col(c) / radius_m
+        pad = 1 + (F.abs(q) + 2) * 2.0 ** -48
+        return F.explode(F.sequence(F.floor(q - pad), F.floor(q + pad)))
+
     d = (uaddr
          .filter(F.col("easting").isNotNull() & F.col("northing").isNotNull())
          .select("addr_id", "easting", "northing",
-                 F.floor(F.col("easting") / radius_m).alias("cx"),
-                 F.floor(F.col("northing") / radius_m).alias("cy")))
-    d = (d
-         .withColumn("dx", F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))))
-         .withColumn("dy", F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))))
-         .select("addr_id", "easting", "northing",
-                 (F.col("cx") + F.col("dx")).alias("cell_x"),
-                 (F.col("cy") + F.col("dy")).alias("cell_y")))
+                 cells("easting").alias("cell_x"))
+         .withColumn("cell_y", cells("northing")))
     g = (gazp
          .filter(F.col("easting").isNotNull() & F.col("northing").isNotNull())
          .select("uprn",
@@ -370,9 +373,9 @@ def cand_spatial(uaddr: DataFrame, gazp: DataFrame,
                  F.floor(F.col("northing") / radius_m).alias("cell_y")))
     dist2 = (F.col("easting") - F.col("g_e")) ** 2 + \
             (F.col("northing") - F.col("g_n")) ** 2
-    # no distinct: a (doc, gaz-row) pair meets in exactly one neighbor
-    # cell; (addr_id, uprn) duplicates from expanded gazetteer variants
-    # are collapsed by union_candidates' groupBy anyway
+    # no distinct: a (doc, gaz-row) pair meets in exactly one of the
+    # doc's cells; (addr_id, uprn) duplicates from expanded gazetteer
+    # variants are collapsed by union_candidates' groupBy anyway
     return (d.join(g, ["cell_x", "cell_y"], "inner")
             .filter(dist2 <= radius_m * radius_m)
             .select("addr_id", "uprn")
@@ -423,20 +426,60 @@ def gaz_hot_tokens(gazp: DataFrame, token_df_cap: int) -> DataFrame:
             .select("tok"))
 
 
+def rare_token_trigram_join(q: DataFrame, gazp: DataFrame, id_col: str,
+                            text_col: str, tokens_col: str, min_sim: float,
+                            top_k: int, token_df_cap: int) -> DataFrame:
+    """The token-blocked trigram join of the J7 rule matcher and the G2
+    group rescue (the reference's per-row pg_trgm GIN lookups,
+    migrations/002_normalized_schema.sql:416-440). q: one row per
+    id_col with a text, a token array and any columns to carry.
+    Candidates share >= 2 distinct tokens once both sides drop those
+    above token_df_cap gazetteer df (gaz_hot_tokens). Only ids ride the
+    token join and the count; the carried columns re-attach with q's
+    grams, and grams are computed per side (see trigram_grams_expr).
+    Keeps sim >= min_sim, then the top_k per id by (sim desc, uprn asc).
+    Returns (id_col, uprn, sim, *carried), carried being every other
+    column of q."""
+    carried = [c for c in q.columns if c not in (id_col, text_col, tokens_col)]
+    hot = F.broadcast(gaz_hot_tokens(gazp, token_df_cap))
+    q_tok = (q.select(id_col, F.explode(F.array_distinct(tokens_col))
+                      .alias("tok"))
+             .join(hot, "tok", "left_anti"))
+    g_tok = (gazp.select("uprn", F.col("addr_core").alias("g_core"),
+                         F.explode(F.array_distinct("tokens")).alias("tok"))
+             .join(hot, "tok", "left_anti"))
+    cand = (q_tok.join(g_tok, "tok")
+            .groupBy(id_col, "uprn", "g_core")
+            .agg(F.count("*").alias("_n_common"))
+            .filter(F.col("_n_common") >= 2))
+    q_grams = q.select(id_col, *carried,
+                       trigram_grams_expr(F.col(text_col)).alias("_qg"))
+    g_grams = (gazp.select(F.col("addr_core").alias("g_core")).distinct()
+               .select("g_core",
+                       trigram_grams_expr(F.col("g_core")).alias("_gg")))
+    w = Window.partitionBy(id_col).orderBy(F.desc("sim"), F.asc("uprn"))
+    return (cand
+            .join(q_grams, id_col)
+            .join(g_grams, "g_core")
+            .withColumn("sim", trigram_sim_expr(F.col("_qg"), F.col("_gg")))
+            .filter(F.col("sim") >= min_sim)
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= top_k)
+            .select(id_col, "uprn", "sim", *carried))
+
+
 def cand_rule_rewrite(uaddr: DataFrame, gazp: DataFrame,
                       min_sim: float = 0.70, top_k: int = 5,
                       token_df_cap: int = 10000,
                       keep_sim: bool = False) -> DataFrame:
     """J7 full rule matcher: first-matching-rule rewrite (single
-    when-chain projection — no per-rule pass over the corpus), token
-    equi-join blocking (>=2 shared RARE tokens — tokens above
-    token_df_cap gazetteer df are dropped from the join key on both
-    sides, see gaz_hot_tokens), trigram sim >= min_sim, top-k per
-    address, per-rule confidence +-adjusted by similarity.
+    when-chain projection — no per-rule pass over the corpus), then
+    rare_token_trigram_join of the rewritten string (>= 2 shared rare
+    tokens, trigram sim >= min_sim, top-k per address), per-rule
+    confidence +-adjusted by similarity.
     Returns (addr_id, uprn, method, method_conf); keep_sim=True
     appends the raw trigram sim (audit / oracle slicing)."""
     from ..functions.normalize import STOP_TOKENS
-    from ..functions.similarity import trigram_grams_expr, trigram_sim_expr
 
     # first matching rule wins: one nested CASE expression, built
     # innermost-last so the FIRST rule is the outermost WHEN
@@ -447,7 +490,7 @@ def cand_rule_rewrite(uaddr: DataFrame, gazp: DataFrame,
         rw = F.trim(F.regexp_replace(rw, r"\s+", " "))
         hit = F.col("addr_can").rlike(pat)
         branch = F.struct(F.lit(name).alias("rule"),
-                          F.lit(conf).alias("conf"), rw.alias("rw"))
+                          F.lit(conf).alias("base_conf"), rw.alias("rw"))
         chain = (F.when(hit, branch) if chain is None
                  else F.when(hit, branch).otherwise(chain))
 
@@ -455,57 +498,15 @@ def cand_rule_rewrite(uaddr: DataFrame, gazp: DataFrame,
           .withColumn("_r", chain)
           .filter(F.col("_r").isNotNull() &
                   (F.col("_r.rw") != F.col("addr_can")))
-          .select("addr_id",
-                  F.col("_r.rule").alias("rule"),
-                  F.col("_r.conf").alias("base_conf"),
-                  F.col("_r.rw").alias("rw")))
-    toks = F.array_distinct(F.filter(
-        F.split("rw", " "),
-        lambda t: (F.length(t) >= 2) & ~t.isin(*STOP_TOKENS)))
-    hot = gaz_hot_tokens(gazp, token_df_cap)
-    # ids-only through the token join and the shared-token count: rule /
-    # base_conf / rw are FUNCTIONS of addr_id (first-matching-rule), so
-    # carrying them through the explode+join+groupBy only widened the
-    # shuffles — they re-attach with the gram join below
-    rw_tok = (rw.select("addr_id", F.explode(toks).alias("tok"))
-              .join(F.broadcast(hot), "tok", "left_anti"))
-    g_tok = (gazp.select("uprn", F.col("addr_core").alias("g_core"),
-                         F.explode(F.array_distinct("tokens")).alias("tok"))
-             .join(F.broadcast(hot), "tok", "left_anti"))
-    cand = (rw_tok.join(g_tok, "tok")
-            .groupBy("addr_id", "uprn", "g_core")
-            .agg(F.count("*").alias("_n_common"))
-            .filter(F.col("_n_common") >= 2))
-
-    from pyspark.sql import Window
-    w = Window.partitionBy("addr_id").orderBy(F.desc("sim"), F.asc("uprn"))
+          .select("addr_id", "_r.*",
+                  F.filter(F.split(F.col("_r.rw"), " "),
+                           lambda t: (F.length(t) >= 2) &
+                           ~t.isin(*STOP_TOKENS)).alias("_toks")))
     adj = (F.when(F.col("sim") >= 0.90, F.col("base_conf") + 0.10)
            .when(F.col("sim") >= 0.80, F.col("base_conf") + 0.05)
            .otherwise(F.col("base_conf")))
-    # Per-SIDE gram arrays, re-attached to the candidate pairs by
-    # equi-join — NOT computed per pair: trigram_grams_expr is built
-    # from nested higher-order functions (transform/flatten), which are
-    # CodegenFallback in Spark (interpreted, ~10-100x slower than
-    # codegen), so evaluating it once per candidate row was this
-    # generator's dominant cost (round-6 measured: 55 s for the sim
-    # filter over 57K pairs at the 20K-doc bench corpus vs ~1 s per
-    # side). One gram row per rewritten address (addr_id is unique in
-    # `rw` — first-matching-rule) and per DISTINCT gazetteer core
-    # string; both frames are small next to the pair set, and at scale
-    # the re-attach is the standard decide-small/attach-once shape.
-    rw_grams = rw.select("addr_id", "rule", "base_conf",
-                         trigram_grams_expr(F.col("rw")).alias("_rwg"))
-    g_grams = (gazp.select(F.col("addr_core").alias("g_core")).distinct()
-               .select("g_core",
-                       trigram_grams_expr(F.col("g_core")).alias("_gg")))
-    return (cand
-            .join(rw_grams, "addr_id")
-            .join(g_grams, "g_core")
-            # JVM trigram verify (identical values to the Python kernel)
-            .withColumn("sim", trigram_sim_expr(F.col("_rwg"), F.col("_gg")))
-            .filter(F.col("sim") >= min_sim)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= top_k)
+    return (rare_token_trigram_join(rw, gazp, "addr_id", "rw", "_toks",
+                                    min_sim, top_k, token_df_cap)
             .select("addr_id", "uprn",
                     F.concat(F.lit("rule_"), "rule").alias("method"),
                     F.least(adj, F.lit(1.0)).alias("method_conf"),
@@ -558,8 +559,6 @@ def cand_hierarchical(uaddr: DataFrame, gazp: DataFrame,
 
     Returns (addr_id, uprn, method='hier_<level>', method_conf=base).
     """
-    from pyspark.sql import Window
-
     nh = norm_house_expr
     d = uaddr.select("addr_id",
                      F.col("postcode").alias("d_pc"),

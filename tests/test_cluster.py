@@ -1,5 +1,8 @@
 """Connected components + consensus unit tests."""
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from ehdc_llpg_address_matching_spark.operators.cluster import (
@@ -82,3 +85,17 @@ def test_consensus_voter_gate_requires_eligible_voters(spark):
     comps = connected_components(build_edges(matches, docs))
     out = cluster_consensus(comps, matches, docs, min_conf=0.5).collect()
     assert out == []  # d5's own group has no ELIGIBLE voter for U7
+
+
+def test_cc_raises_when_rounds_run_out(spark, monkeypatch):
+    """A 64-node chain with shuffled ids needs more than 3 star rounds:
+    with the budget cut to 3 the labeling is refused, not returned
+    split; with the default budget the chain is one component."""
+    from ehdc_llpg_address_matching_spark.operators import cluster
+    nodes = [f"n{i:02d}" for i in range(64)]
+    random.Random(7).shuffle(nodes)
+    edges = list(zip(nodes, nodes[1:]))
+    assert set(_cc(spark, edges).values()) == {"n00"}
+    monkeypatch.setattr(cluster, "MAX_ROUNDS", 3)
+    with pytest.raises(RuntimeError, match="after 3 rounds"):
+        _cc(spark, edges)

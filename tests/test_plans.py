@@ -137,7 +137,7 @@ def test_wholestage_codegen_covers_column_features(spark, prepared):
 
 def test_spatial_grid_join_no_cartesian(spark, prepared):
     """J6: the 100 m ST_DWithin must plan as a grid-cell equi-join
-    (3x3 neighbor explode on the doc side), never a cartesian/NLJ."""
+    (per-axis cell-range explode on the doc side), never a cartesian/NLJ."""
     gazp, _, uaddr, _ = prepared
     df = C.cand_spatial(uaddr, gazp)
     r = plan_report(df)

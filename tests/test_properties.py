@@ -1,8 +1,10 @@
 """Property-based invariants (hypothesis) + warehouse upsert."""
 
+import math
+
 import pandas as pd
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from ehdc_llpg_address_matching_spark.functions.normalize import (
@@ -126,3 +128,54 @@ def test_connected_components_match_union_find(spark, paths):
     got = {r["node"]: r["component"]
            for r in connected_components(df).collect()}
     assert got == _union_find_components(edges)
+
+
+def _nudge(x, ulps):
+    """x moved by |ulps| representable doubles, up or down."""
+    for _ in range(abs(ulps)):
+        x = math.nextafter(x, math.inf if ulps > 0 else -math.inf)
+    return x
+
+
+def _boundary_points(r, base):
+    """Every coordinate within 2 ulps of (base + k)·R + eps, k in
+    {-1, 0, 1}, eps a tiny offset, once on each axis: the pairs ~R
+    apart sit on the filter's edge and, across 0 or a cell boundary,
+    two cells apart."""
+    xs = {_nudge((base + k) * r + eps, ulps)
+          for k in (-1, 0, 1)
+          for eps in (0.0, 1e-15, -1e-15, 1e-13, -1e-13, 5e-324, -5e-324)
+          for ulps in range(-2, 3)}
+    return [(x, 0.0) for x in sorted(xs)] + [(0.0, x) for x in sorted(xs)]
+
+
+@given(st.one_of(st.sampled_from([100.0, 1.0, 0.3, 37.5]),
+                 st.floats(0.01, 1000.0)),
+       st.one_of(st.just(0), st.integers(-10**6, 10**6)))
+@example(100.0, 0)
+@settings(max_examples=10, deadline=None)
+def test_cand_spatial_matches_cross_join(spark, r, base):
+    """cand_spatial's grid join returns exactly the pairs a cross join
+    keeps under the same float filter, over near-boundary doubles:
+    R = 100, base 0 holds doc (-1e-15, 0) vs gazetteer (100.0, 0), the
+    pair a fixed 3x3 neighbourhood missed."""
+    from pyspark.sql import functions as F
+
+    from ehdc_llpg_address_matching_spark.operators.candidates import \
+        cand_spatial
+    pts = _boundary_points(r, base)
+    uaddr = spark.createDataFrame([(f"a{i}", *p) for i, p in enumerate(pts)],
+                                  "addr_id string, easting double, "
+                                  "northing double")
+    gazp = spark.createDataFrame([(f"u{i}", *p) for i, p in enumerate(pts)],
+                                 "uprn string, easting double, "
+                                 "northing double")
+    got = {(x["addr_id"], x["uprn"])
+           for x in cand_spatial(uaddr, gazp, radius_m=r).collect()}
+    g = gazp.select("uprn", F.col("easting").alias("g_e"),
+                    F.col("northing").alias("g_n"))
+    dist2 = (F.col("easting") - F.col("g_e")) ** 2 + \
+        (F.col("northing") - F.col("g_n")) ** 2
+    want = {(x["addr_id"], x["uprn"])
+            for x in uaddr.crossJoin(g).filter(dist2 <= r * r).collect()}
+    assert got == want

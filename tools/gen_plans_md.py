@@ -103,8 +103,10 @@ def main():
     spatial = C.cand_spatial(uaddr, gazp)
     add("J6 spatial proximity grid join", spatial,
         "ST_DWithin(R=100m) as a grid-cell equi-join: the doc side "
-        "explodes into its 3x3 neighbor cells, both sides join on "
-        "(cell_x, cell_y), exact Euclidean filter after. No cartesian "
+        "explodes, per axis, into the cells floor(q - pad) .. "
+        "floor(q + pad) (3, or 4 at a cell boundary; see cand_spatial's "
+        "cover proof), both sides join on (cell_x, cell_y), exact "
+        "Euclidean filter after. No cartesian "
         "product, no UDF; the bench's denser 1-D variant uses a "
         "half-plane d in {0,+1} explode to halve the pair volume.",
         r"Join \w+join|Generate explode|CartesianProduct")
