@@ -1601,8 +1601,10 @@ def _engine_fixture(spark) -> str:
 
 def q_j5_hier_engine(spark, sf):
     """J5 ENGINE path: cand_hierarchical (5-level stop-at-first
-    cascade, residue-only levels 4-5) on the persisted engine fixture;
-    the oracle replays the cascade in SQL over the same parquet."""
+    cascade as one keyed join against each key's top-k gazetteer
+    uprns) on the persisted engine fixture; the oracle replays the
+    cascade in SQL over the same parquet, levels 4-5 for the addresses
+    levels 1-3 miss."""
     from ehdc_llpg_address_matching_spark.operators.candidates import \
         cand_hierarchical
     fix = _engine_fixture(spark)

@@ -157,10 +157,17 @@ def canonicalize_series(raw: pd.Series) -> pd.DataFrame:
     # the DuckDB oracle's [^a-zA-Z0-9 \t-] semantics for accented input
     s = s.str.replace(r"[^A-Z0-9\s-]", " ", regex=True)  # drop punctuation
     s = s.str.replace(r"(?<!\d)-|-(?!\d)", " ", regex=True)  # keep 10-12 ranges
+    # punctuation dropped above ('GU34.1AA') or a stripped postcode
+    # closing a gap ('A0 A0 0AA 0AA') can leave a new postcode shape;
+    # strip to a fixed point so addr_can never holds one
+    while (s != (stripped := s.str.replace(POSTCODE_RE, " ", regex=True))).any():
+        s = stripped
+    # collapse before the ST rule, whose one-space lookbehind would
+    # otherwise miss 'A0..ST' on this pass and hit it on the next
+    s = s.str.replace(r"\s+", " ", regex=True).str.strip()
     s = s.str.replace(_ABBREV_RE, lambda m: ABBREVIATIONS[m.group(0)], regex=True)
     # bare ST not at string start => STREET
     s = s.str.replace(r"(?<=\w )\bST\b", "STREET", regex=True)
-    s = s.str.replace(r"\s+", " ", regex=True).str.strip()
     core = s.str.replace(DESCRIPTOR_RE, " ", regex=True)
     core = core.str.replace(r"\s+", " ", regex=True).str.strip()
     return pd.DataFrame({"addr_can": s, "postcode": postcode, "addr_core": core})

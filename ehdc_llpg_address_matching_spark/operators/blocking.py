@@ -22,6 +22,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+# salt_hot_keys: a key is hot when more than HOT_KEY_THRESHOLD gazetteer
+# rows carry it; a hot key is split over N_SALT salts
+HOT_KEY_THRESHOLD = 2000
+N_SALT = 8
 
 
 def with_blocking_keys(df: DataFrame,
@@ -76,7 +80,8 @@ def explode_keys(df: DataFrame, id_cols: list[str]) -> DataFrame:
 
 
 def salt_hot_keys(doc_keys: DataFrame, gaz_keys: DataFrame,
-                  hot_threshold: int = 2000, n_salt: int = 16,
+                  hot_threshold: int = HOT_KEY_THRESHOLD,
+                  n_salt: int = N_SALT,
                   doc_id_col: str = "doc_id") -> tuple[DataFrame, DataFrame]:
     """Explicit salting of hot blocking keys (north_rule requirement).
 

@@ -37,6 +37,11 @@ MAX_RANGE_UNITS = 50
 # reads it too, so the engine and its oracle share one value.
 VECTOR_MIN_SIM = 0.70
 
+# cand_component_joins' trigram gates: (c) the fuzzy street with a
+# house match, (d) the business/property name
+FUZZY_STREET_SIM = 0.8
+NAME_SIM = 0.8
+
 # cand_vector's IVF route: each address probes IVF_PROBE of IVF_CELLS
 # k-means cells (probing every cell makes the route exact)
 IVF_CELLS = 64
@@ -229,15 +234,14 @@ def cand_exact_canonical(uaddr: DataFrame, gazp: DataFrame) -> DataFrame:
             .select("addr_id", "uprn", F.lit("exact_canonical").alias("method")))
 
 
-def cand_blocked(uaddr: DataFrame, gazp: DataFrame,
-                 hot_threshold: int = 2000, n_salt: int = 8) -> DataFrame:
+def cand_blocked(uaddr: DataFrame, gazp: DataFrame) -> DataFrame:
     """J3: the main fuzzy candidate source. Explode blocking keys on
-    both sides, salt hot keys, equi-join on (kind, key, salt). The
-    similarity filter happens downstream in the scoring UDF."""
+    both sides, salt hot keys (blocking.HOT_KEY_THRESHOLD, N_SALT),
+    equi-join on (kind, key, salt). The similarity filter happens
+    downstream in the scoring UDF."""
     dk = explode_keys(uaddr, ["addr_id"])
     gk = explode_keys(gazp, ["uprn"])
-    dk, gk = salt_hot_keys(dk, gk, hot_threshold=hot_threshold,
-                           n_salt=n_salt, doc_id_col="addr_id")
+    dk, gk = salt_hot_keys(dk, gk, doc_id_col="addr_id")
     # no distinct here: a pair meeting under several keys is collapsed
     # by union_candidates' groupBy — one shuffle instead of two
     return (dk.join(gk, ["block_kind", "block_key", "salt"], "inner")
@@ -245,19 +249,17 @@ def cand_blocked(uaddr: DataFrame, gazp: DataFrame,
             .withColumn("method", F.lit("blocked_fuzzy")))
 
 
-def cand_component_joins(uaddr: DataFrame, gazp: DataFrame,
-                         fuzzy_street_sim: float = 0.8,
-                         name_sim: float = 0.8) -> DataFrame:
+def cand_component_joins(uaddr: DataFrame, gazp: DataFrame) -> DataFrame:
     """J4 component-equality strategies + J8 postcode-block join
     (reference: internal/matcher/engine_components_fixed.go:201-241,
     322-599 + internal/engine/postcode_matcher.go:143-248):
       (a) postcode + house-number equality        -> 'comp_pc_house'
       (b) street + locality + house equality      -> 'comp_street_loc'
-      (c) FUZZY street (trigram >= 0.8) with MANDATORY house equality
-          (engine_components_fixed.go:525-599's critical fix) —
+      (c) FUZZY street (trigram >= FUZZY_STREET_SIM) with MANDATORY
+          house equality (engine_components_fixed.go:525-599's fix) —
           phonetic-street + house as the blocking equi-join, trigram
           verify after                            -> 'comp_fuzzy_road'
-      (d) business/property-name similarity >= 0.8
+      (d) business/property-name similarity >= NAME_SIM
           (engine_components_fixed.go:378-448) — blocked on the name's
           first token + locality                  -> 'business_name'
       (e) full-postcode block (J8)                -> 'postcode_block'
@@ -312,7 +314,7 @@ def cand_component_joins(uaddr: DataFrame, gazp: DataFrame,
                (F.col("d_h") == F.col("g_h")))
          .filter(F.col("d_st") != F.col("g_st"))  # exact handled by (b)
          .withColumn("_ssim", trigram_sim_expr(F.col("_dsg"), F.col("_gsg")))
-         .filter(F.col("_ssim") >= fuzzy_street_sim)
+         .filter(F.col("_ssim") >= FUZZY_STREET_SIM)
          .select("addr_id", "uprn")
          .withColumn("method", F.lit("comp_fuzzy_road")))
     # (d): property/business names ('ROSE COTTAGE', 'MARKS AND
@@ -327,7 +329,7 @@ def cand_component_joins(uaddr: DataFrame, gazp: DataFrame,
           .filter((F.col("d_loc") == "") | (F.col("g_loc") == "") |
                   (F.col("d_loc") == F.col("g_loc")))
           .withColumn("_nsim", trigram_sim_expr(F.col("_dng"), F.col("_gng")))
-          .filter(F.col("_nsim") >= name_sim)
+          .filter(F.col("_nsim") >= NAME_SIM)
           .select("addr_id", "uprn")
           .withColumn("method", F.lit("business_name")))
     e = (d.filter(F.col("d_pc2") != "")
@@ -528,114 +530,70 @@ HIER_BASE = {
 
 def cand_hierarchical(uaddr: DataFrame, gazp: DataFrame,
                       top_k: int = 5) -> DataFrame:
-    """J5: 5-level component cascade with stop-at-first-hit semantics.
+    """J5: 5-level component cascade with stop-at-first-hit semantics,
+    as one equi-join on (level, key). A level's key is emitted only
+    when every part is non-empty:
 
-    Two passes (round-6 restructure):
+      1 [postcode, house]   3 [street, locality]
+      4 [street_phonetic]   5 [locality]
 
-    1. PROBE: one LEFT SEMI join per level over the full address set —
-       "does this address have ANY hit at level k". Semi joins never
-       fan out (output <= |d| rows of just addr_id), so probing the
-       hot levels 4-5 for every address is safe at any scale, unlike
-       their full joins. One tiny groupBy then yields each address's
-       winning (minimum) level.
-    2. FETCH: each level's full join runs ONLY for the addresses whose
-       winning level it is — exactly the rows stop-at-first keeps, and
-       a subset of what the previous residue-anti-join chain joined
-       (its l4 join ran for every level-1-3 miss, including addresses
-       whose l4 rows a later step discarded).
+    Level 2 (street + house, and d_loc = '' OR g_loc = '' OR
+    d_loc = g_loc) is keys too: a gazetteer row emits [st, h] and
+    [st, h, g_loc]; a doc emits [st, h] when d_loc = '', else
+    [st, h, d_loc] and [st, h, '']. Arrays of different lengths never
+    compare equal, so no separator is needed.
 
-    Output is identical to the sequential residue formulation: per
-    address the same winning level and the same hit set. The win is
-    plan shape: the residue chain serialized ~10 dependent stage
-    materializations (each level's anti-join waited on the previous
-    level's distinct), where the probe pass runs all five semi joins
-    CONCURRENTLY and the fetch pass all five full joins concurrently —
-    critical path ~5 stages instead of ~10, and only one small frame
-    (ids + winning level) is materialized instead of three level frames.
-    That frame is an eager localCheckpoint: the probe pass runs once,
-    here, and all five fetch joins plan against one LogicalRDD leaf
-    instead of re-analyzing the probe subtree. The checkpoint stays
-    pinned; run_pipeline records it and drops it in ``release()``.
+    The gazetteer side keeps only the top_k smallest uprns per
+    (level, key). The output is the cascade's: an address hits a level
+    exactly when one of its keys has a non-empty list, and the top_k
+    smallest uprns of a union of keys are among each key's own top_k.
+    So the join emits at most top_k rows per (address, key), even for
+    a town-sized locality key (SCALE.md lesson 2). Each address keeps
+    its minimum level, then the top_k uprns of it.
 
     Returns (addr_id, uprn, method='hier_<level>', method_conf=base).
     """
-    nh = norm_house_expr
-    d = uaddr.select("addr_id",
-                     F.col("postcode").alias("d_pc"),
-                     nh(F.col("c_house")).alias("d_h"),
-                     F.col("c_street").alias("d_st"),
-                     F.col("c_locality").alias("d_loc"),
-                     F.col("street_phonetic").alias("d_phon"))
-    g = gazp.select("uprn",
-                    F.col("postcode").alias("g_pc"),
-                    nh(F.col("c_house")).alias("g_h"),
-                    F.col("c_street").alias("g_st"),
-                    F.col("c_locality").alias("g_loc"),
-                    F.col("street_phonetic").alias("g_phon"))
+    h = norm_house_expr(F.col("c_house"))
+    pc, st, loc, phon = (F.col(c) for c in ("postcode", "c_street",
+                                            "c_locality", "street_phonetic"))
 
-    # (rank, name, d-side filter, g-side filter, join condition) — the
-    # SAME filters/conditions drive both the semi probe and the fetch,
-    # so the two passes cannot disagree.
-    levels = [
-        (1, "postcode_house",
-         (F.col("d_pc") != "") & (F.col("d_h") != ""),
-         (F.col("g_pc") != "") & (F.col("g_h") != ""),
-         (F.col("d_pc") == F.col("g_pc")) & (F.col("d_h") == F.col("g_h"))),
-        (2, "street_house_locality",
-         (F.col("d_st") != "") & (F.col("d_h") != ""),
-         (F.col("g_st") != "") & (F.col("g_h") != ""),
-         (F.col("d_st") == F.col("g_st")) & (F.col("d_h") == F.col("g_h"))
-         & ((F.col("d_loc") == "") | (F.col("g_loc") == "") |
-            (F.col("d_loc") == F.col("g_loc")))),
-        (3, "street_locality",
-         (F.col("d_st") != "") & (F.col("d_loc") != ""),
-         F.lit(True),
-         (F.col("d_st") == F.col("g_st")) &
-         (F.col("d_loc") == F.col("g_loc"))),
-        (4, "street_phonetic",
-         F.col("d_phon") != "",
-         F.col("g_phon") != "",
-         F.col("d_phon") == F.col("g_phon")),
-        (5, "locality_only",
-         F.col("d_loc") != "",
-         F.col("g_loc") != "",
-         F.col("d_loc") == F.col("g_loc")),
-    ]
+    def key(level, parts, *tail):
+        ok = F.lit(True)
+        for p in parts:
+            ok = ok & (p != "")
+        return F.when(ok, F.struct(F.lit(level).alias("level"),
+                                   F.array(*parts, *tail).alias("key")))
 
-    probes = [
-        d.filter(df_).join(g.filter(gf), cond, "left_semi")
-         .select("addr_id", F.lit(rank).alias("_lvl"))
-        for rank, _, df_, gf, cond in levels
-    ]
-    allp = probes[0]
-    for p in probes[1:]:
-        allp = allp.unionByName(p)
-    winners = allp.groupBy("addr_id").agg(F.min("_lvl").alias("_lvl"))
-    # addresses with no hit at any level drop out here (inner join),
-    # exactly as they produced no rows before
-    d_ann = d.join(winners, "addr_id").localCheckpoint(eager=True)
+    def keys(df, id_col, *level_keys):
+        return (df.select(id_col, F.explode(F.array_compact(
+                    F.array(*level_keys))).alias("_k"))
+                .select(id_col, "_k.level", "_k.key"))
 
-    def lvl(df, name):
-        return df.select("addr_id", "uprn",
-                         F.lit(name).alias("level_name"),
-                         F.lit(HIER_BASE[name]).alias("method_conf"))
-
-    parts = [
-        lvl(d_ann.filter((F.col("_lvl") == rank) & df_)
-            .join(g.filter(gf), cond), name)
-        for rank, name, df_, gf, cond in levels
-    ]
-    allc = parts[0]
-    for p in parts[1:]:
-        allc = allc.unionByName(p)
-
-    w_k = Window.partitionBy("addr_id").orderBy(F.asc("uprn"))
-    return (allc.dropDuplicates(["addr_id", "uprn"])
-            .withColumn("_rn", F.row_number().over(w_k))
+    g = (keys(gazp, "uprn", key(1, [pc, h]), key(2, [st, h]),
+              key(2, [st, h], loc), key(3, [st, loc]), key(4, [phon]),
+              key(5, [loc]))
+         .distinct()
+         .withColumn("_rn", F.row_number().over(
+             Window.partitionBy("level", "key").orderBy("uprn")))
+         .filter(F.col("_rn") <= top_k))
+    d = keys(uaddr, "addr_id", key(1, [pc, h]),
+             F.when(loc == "", key(2, [st, h]))
+              .otherwise(key(2, [st, h], F.lit(""))),
+             key(2, [st, h, loc]), key(3, [st, loc]), key(4, [phon]),
+             key(5, [loc]))
+    w = Window.partitionBy("addr_id")
+    by_level = lambda vals: F.element_at(F.array(*map(F.lit, vals)),
+                                         F.col("level"))
+    return (d.join(g, ["level", "key"])
+            .withColumn("_min", F.min("level").over(w))
+            .filter(F.col("level") == F.col("_min"))
+            .select("addr_id", "uprn", "level").distinct()
+            .withColumn("_rn", F.row_number().over(w.orderBy("uprn")))
             .filter(F.col("_rn") <= top_k)
             .select("addr_id", "uprn",
-                    F.concat(F.lit("hier_"), "level_name").alias("method"),
-                    "method_conf"))
+                    by_level(["hier_" + n for n in HIER_BASE])
+                    .alias("method"),
+                    by_level(HIER_BASE.values()).alias("method_conf")))
 
 
 def cand_vector(uaddr: DataFrame, gazp: DataFrame, top_k: int = 10,

@@ -148,6 +148,27 @@ def build_edges(doc_matches: DataFrame, docs: DataFrame,
     return du.unionByName(dd)
 
 
+def _vote_winner(components: DataFrame,
+                 matches: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The components' document nodes (doc_id, component), and per
+    component the UPRN with the most votes among ``matches`` (tie-break:
+    max confidence, then min uprn) as (component, uprn, votes,
+    max_conf)."""
+    doc_nodes = components.filter(F.col("node").startswith("d:")) \
+        .select(F.expr("substring(node, 3)").alias("doc_id"), "component")
+    votes = (matches.join(doc_nodes, "doc_id")
+             .groupBy("component", "uprn")
+             .agg(F.count("*").alias("votes"),
+                  F.max("confidence").alias("max_conf")))
+    wv = Window.partitionBy("component").orderBy(
+        F.desc("votes"), F.desc("max_conf"), F.asc("uprn"))
+    winner = (votes
+              .withColumn("_rn", F.row_number().over(wv))
+              .filter(F.col("_rn") == 1)
+              .drop("_rn"))
+    return doc_nodes, winner
+
+
 def cluster_consensus(components: DataFrame, doc_matches: DataFrame,
                       all_docs: DataFrame,
                       min_votes: int = 2, max_cluster: int = 200,
@@ -163,20 +184,8 @@ def cluster_consensus(components: DataFrame, doc_matches: DataFrame,
 
     Returns (doc_id, uprn, confidence, method='cluster_consensus') for
     newly assigned docs only."""
-    doc_nodes = components.filter(F.col("node").startswith("d:")) \
-        .select(F.expr("substring(node, 3)").alias("doc_id"), "component")
-    votes = (doc_matches
-             .filter(F.col("confidence") > min_conf)
-             .join(doc_nodes, "doc_id")
-             .groupBy("component", "uprn")
-             .agg(F.count("*").alias("votes"),
-                  F.max("confidence").alias("max_conf")))
-    wv = Window.partitionBy("component").orderBy(
-        F.desc("votes"), F.desc("max_conf"), F.asc("uprn"))
-    winner = (votes
-              .withColumn("_rn", F.row_number().over(wv))
-              .filter(F.col("_rn") == 1)
-              .drop("_rn"))
+    doc_nodes, winner = _vote_winner(
+        components, doc_matches.filter(F.col("confidence") > min_conf))
     stats = (doc_nodes
              .join(doc_matches.select("doc_id", F.lit(1).alias("_m")),
                    "doc_id", "left")
@@ -229,14 +238,5 @@ def canonical_uprn_per_cluster(components: DataFrame,
                                doc_matches: DataFrame) -> DataFrame:
     """(component, canonical_uprn) — majority vote with the same
     deterministic tie-break; the cluster's stable identity output."""
-    doc_nodes = components.filter(F.col("node").startswith("d:")) \
-        .select(F.expr("substring(node, 3)").alias("doc_id"), "component")
-    votes = (doc_matches.join(doc_nodes, "doc_id")
-             .groupBy("component", "uprn")
-             .agg(F.count("*").alias("votes"),
-                  F.max("confidence").alias("max_conf")))
-    wv = Window.partitionBy("component").orderBy(
-        F.desc("votes"), F.desc("max_conf"), F.asc("uprn"))
-    return (votes.withColumn("_rn", F.row_number().over(wv))
-            .filter(F.col("_rn") == 1)
-            .select("component", F.col("uprn").alias("canonical_uprn")))
+    return _vote_winner(components, doc_matches)[1].select(
+        "component", F.col("uprn").alias("canonical_uprn"))

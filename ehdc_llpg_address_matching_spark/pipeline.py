@@ -116,7 +116,7 @@ def generate_candidates(uaddr: DataFrame, gazp: DataFrame,
     # J5 hierarchical cascade last: a doc matchable ONLY via the
     # phonetic/locality levels (no postcode, trigram-block-defeating
     # typo) has no other generator
-    gens.append(pins.adopt(C.cand_hierarchical(uaddr, gazp)))
+    gens.append(C.cand_hierarchical(uaddr, gazp))
     # the union of 7 generators (each a join tree over uaddr/gazp) is a
     # large logical plan; the checkpoint materializes the (small)
     # candidate set so scoring and the audit consumers plan against one

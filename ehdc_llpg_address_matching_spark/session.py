@@ -103,10 +103,10 @@ class Pins:
 
     ``checkpoint`` materializes a frame and records its storage.
     ``adopt`` records the checkpoints a helper made inside a frame it
-    returns (prepare_gazetteer's pre-expansion cut, cand_hierarchical's
-    level table, connected_components' last round). Checkpoints under
-    the ``keep`` frames, the caller's inputs, are never recorded, so
-    ``release`` cannot drop storage the caller still reads."""
+    returns (prepare_gazetteer's pre-expansion cut, connected_components'
+    last round). Checkpoints under the ``keep`` frames, the caller's
+    inputs, are never recorded, so ``release`` cannot drop storage the
+    caller still reads."""
 
     def __init__(self, *keep):
         self._keep = {rdd.id() for df in keep if df is not None

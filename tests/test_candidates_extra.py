@@ -108,6 +108,24 @@ def test_hierarchical_street_house(spark):
     assert out[0]["method_conf"] == pytest.approx(0.90)
 
 
+def test_hierarchical_builds_without_jobs_or_pins(spark):
+    """Building the cascade plans one keyed join: it runs no Spark job
+    and leaves no checkpoint beyond its inputs' for a caller to
+    release."""
+    from ehdc_llpg_address_matching_spark.session import checkpoint_rdds
+    gaz = _gaz(spark, ["7 GREEN LANE, LISS, GU33 7AB"])
+    ua = _uaddr(spark, ["7 GREEN LANE, LISS"])
+    sc = spark.sparkContext
+    sc.setJobGroup("hier_build", "build cand_hierarchical")
+    try:
+        out = C.cand_hierarchical(ua, gaz)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("hier_build") == []
+    inputs = {r.id() for df in (ua, gaz) for r in checkpoint_rdds(df)}
+    assert {r.id() for r in checkpoint_rdds(out)} <= inputs
+
+
 # ------------------------------------------------------------- J4 c/d
 
 def test_fuzzy_road_with_house(spark):

@@ -159,12 +159,12 @@ def test_spread_for_udf_spreads_and_noops(spark):
     assert spread_for_udf(wide).rdd.getNumPartitions() == p + 4
 
 
-# ------------------------------------- J5 probe/fetch level resolution
+# ------------------------------------------- J5 level resolution
 
 def test_hierarchical_probe_fetch_mid_levels(spark):
-    """The round-6 cascade restructure resolves each address's
-    stop-at-first level with semi-join probes before fetching. Guard
-    the mid-level selection the older tests don't reach: an address
+    """cand_hierarchical resolves each address's stop-at-first level
+    as the minimum level among its keyed-join hits. Guard the
+    mid-level selection the older tests don't reach: an address
     hitting levels 3 AND 5 must surface ONLY level-3 rows, and a
     phonetic-only typo must land on level 4."""
     from ehdc_llpg_address_matching_spark.operators import candidates as C
