@@ -1550,13 +1550,15 @@ def _engine_fixture(spark) -> str:
     from ehdc_llpg_address_matching_spark.operators.blocking import \
         with_blocking_keys
     from ehdc_llpg_address_matching_spark.pipeline import normalize_documents
+    from ehdc_llpg_address_matching_spark.session import release_checkpoint
     from ehdc_llpg_address_matching_spark.synth import (SynthConfig,
                                                         synth_spark_tables)
 
     gaz_df, docs_df, _ = synth_spark_tables(
         spark, SynthConfig(seed=23, n_gazetteer=150, n_docs=250,
                            historic_frac=0.12))
-    gazp = C.prepare_gazetteer(gaz_df)
+    # four writes below read gazp: prepare it once, release it after
+    gazp = C.prepare_gazetteer(gaz_df).localCheckpoint(eager=True)
     docs_n = normalize_documents(docs_df, None)
     uaddr = with_blocking_keys(C.prepare_unique_addresses(docs_n))
 
@@ -1595,6 +1597,7 @@ def _engine_fixture(spark) -> str:
                   F.col("blpu_class").alias("g_blpu"),
                   F.col("easting").alias("g_e"),
                   F.col("northing").alias("g_n")), "gaz_feat")
+    release_checkpoint(gazp)
     _engine_fix_built = True
     return _ENGINE_FIX
 

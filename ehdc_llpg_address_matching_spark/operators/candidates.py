@@ -51,33 +51,47 @@ IVF_PROBE = 8
 def expand_ranges(gazp: DataFrame) -> DataFrame:
     """Gazetteer densification (J10; reference:
     internal/llpg/range_expander.go:78-210): '10-11 HIGH ST' spawns
-    rows for 10 and 11 (same UPRN), F.sequence + explode; span ≤ 50
-    guard (see MAX_RANGE_UNITS); numeric-numeric ranges only (alpha
-    ranges are <0.1% of LLPG and fall back to the fuzzy path)."""
-    rng = gazp.filter(F.col("c_house").rlike(r"^\d+-\d+$"))
-    lo = F.split("c_house", "-").getItem(0).cast("int")
-    hi = F.split("c_house", "-").getItem(1).cast("int")
-    exp = (rng
-           .withColumn("_lo", lo).withColumn("_hi", hi)
-           .filter((F.col("_hi") > F.col("_lo")) &
-                   (F.col("_hi") - F.col("_lo") <= MAX_RANGE_UNITS))
-           .withColumn("_n", F.explode(F.sequence("_lo", "_hi")))
-           .withColumn("_ns", F.col("_n").cast("string"))
-           .withColumn("addr_can",
-                       F.regexp_replace("addr_can", r"\b\d+-\d+\b", F.col("_ns")))
-           .withColumn("addr_core",
-                       F.regexp_replace("addr_core", r"\b\d+-\d+\b", F.col("_ns")))
-           .withColumn("c_house", F.col("_ns"))
-           .withColumn("house_numbers", F.array(F.col("_ns")))
-           .withColumn("source_type", F.lit("expanded"))
-           .drop("_lo", "_hi", "_n", "_ns"))
-    return gazp.withColumn("source_type", F.lit("original")).unionByName(exp)
+    rows for 10 and 11 (same UPRN) next to its original row. One
+    explode_outer per row of [null] + the range's numbers: the null
+    element is the 'original' row, each number an 'expanded' row. Span
+    ≤ 50 guard (see MAX_RANGE_UNITS); numeric-numeric ranges only
+    (alpha ranges are <0.1% of LLPG and fall back to the fuzzy path);
+    a number past int range stays original-only (try_cast). An
+    explode_outer, not an explode: Catalyst infers a size() > 0 filter
+    from explode and pushes it under the normalization UDF
+    (blocking.explode_keys)."""
+    lo, hi = (F.split("c_house", "-")[i].try_cast("int") for i in (0, 1))
+    strs = "array<string>"
+    nums = F.when(F.col("c_house").rlike(r"^\d+-\d+$") & (hi > lo)
+                  & (hi - lo <= MAX_RANGE_UNITS),
+                  F.sequence(lo, hi).cast(strs)
+                  ).otherwise(F.array().cast(strs))
+    ns = F.col("_ns")
+    orig = ns.isNull()
+
+    def sub(c):
+        return F.when(orig, F.col(c)).otherwise(
+            F.regexp_replace(c, r"\b\d+-\d+\b", ns))
+    return (gazp
+            .withColumn("_ns", F.explode_outer(
+                F.concat(F.array(F.lit(None).cast("string")), nums)))
+            .withColumns({
+                "addr_can": sub("addr_can"),
+                "addr_core": sub("addr_core"),
+                "c_house": F.coalesce(ns, "c_house"),
+                "house_numbers": F.when(orig, F.col("house_numbers"))
+                                  .otherwise(F.array(ns)),
+                "source_type": F.when(orig, F.lit("original"))
+                                .otherwise(F.lit("expanded"))})
+            .drop("_ns"))
 
 
 def prepare_gazetteer(gaz: DataFrame) -> DataFrame:
     """Normalize + parse + phonetic + blocking keys + range expansion.
     Mirrors the reference's combined original∪expanded address table
-    (cmd/matcher-v2/optimize_layer2.go:23-57)."""
+    (cmd/matcher-v2/optimize_layer2.go:23-57). The result holds no
+    checkpoint and runs the normalization UDF once; the caller's one
+    materialization of it is the gazetteer's only pin."""
     # derive everything from full_address (the reference re-parses via
     # gopostal too); drop any pre-parsed source columns that would
     # collide with the derived names
@@ -85,28 +99,14 @@ def prepare_gazetteer(gaz: DataFrame) -> DataFrame:
                         "tokens", "house_numbers")
             if c in gaz.columns]
     from ..functions.normalize import with_normalized
-    from ..session import spread_for_udf
+    from ..session import compact_reference_frame, spread_for_udf
     g = with_normalized(spread_for_udf(gaz.drop(*drop)),
                         raw_col="full_address")
-    # materialize the normalized frame ONCE before the range-expansion
-    # union: both union branches (original ∪ expanded) reference it, and
-    # without a materialization Spark re-executes the whole UDF chain
-    # per branch — the round-6 stage profile showed an extra full
-    # _parse pass (the range filter) plus a re-canonicalization riding
-    # the expanded branch. localCheckpoint preserves the plan's size
-    # stats (verified on Spark 4.1), so compact_reference_frame below
-    # still sees real sizes. At warehouse scale this frame is cached by
-    # every caller anyway — the checkpoint is the same storage class,
-    # and it halves the normalization-UDF work per materialization.
-    g = g.localCheckpoint(eager=True)
-    g = expand_ranges(g)
-    g = with_blocking_keys(g)
-    # compact the reference frame before callers cache it: the spread +
-    # expansion union leaves a small gazetteer as dozens of near-empty
-    # partitions that every downstream broadcast build re-scans
+    # compact the reference frame before callers cache it: the UDF
+    # spread leaves a small gazetteer as near-empty partitions that
+    # every downstream broadcast build re-scans
     # (session.compact_reference_frame — size-derived, no-op at scale)
-    from ..session import compact_reference_frame
-    return compact_reference_frame(g)
+    return compact_reference_frame(with_blocking_keys(expand_ranges(g)))
 
 
 def prepare_unique_addresses(docs_norm: DataFrame) -> DataFrame:
@@ -544,12 +544,14 @@ def cand_hierarchical(uaddr: DataFrame, gazp: DataFrame,
     compare equal, so no separator is needed.
 
     The gazetteer side keeps only the top_k smallest uprns per
-    (level, key). The output is the cascade's: an address hits a level
+    (level, key) (dense_rank: a range-expanded uprn's rows share a
+    rank). The output is the cascade's: an address hits a level
     exactly when one of its keys has a non-empty list, and the top_k
     smallest uprns of a union of keys are among each key's own top_k.
-    So the join emits at most top_k rows per (address, key), even for
-    a town-sized locality key (SCALE.md lesson 2). Each address keeps
-    its minimum level, then the top_k uprns of it.
+    So the join emits, per (address, key), at most top_k distinct
+    uprns, each at most once per gazetteer row that carries it, even
+    for a town-sized locality key (SCALE.md lesson 2). Each address
+    keeps its minimum level, then the top_k uprns of it.
 
     Returns (addr_id, uprn, method='hier_<level>', method_conf=base).
     """
@@ -572,8 +574,7 @@ def cand_hierarchical(uaddr: DataFrame, gazp: DataFrame,
     g = (keys(gazp, "uprn", key(1, [pc, h]), key(2, [st, h]),
               key(2, [st, h], loc), key(3, [st, loc]), key(4, [phon]),
               key(5, [loc]))
-         .distinct()
-         .withColumn("_rn", F.row_number().over(
+         .withColumn("_rn", F.dense_rank().over(
              Window.partitionBy("level", "key").orderBy("uprn")))
          .filter(F.col("_rn") <= top_k))
     d = keys(uaddr, "addr_id", key(1, [pc, h]),

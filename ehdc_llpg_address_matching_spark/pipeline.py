@@ -339,12 +339,10 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
     of them may be used after ``release()``."""
     cfg = cfg or PipelineConfig()
     pins = Pins(docs, gaz, gazp_prepared)
-    # gazetteer prep (original ∪ range-expanded, keys); adopt() also
-    # records prepare_gazetteer's own pre-expansion cut
     if gazp_prepared is not None:
         gazp = gazp_prepared
     else:
-        gazp = pins.checkpoint(pins.adopt(C.prepare_gazetteer(gaz)))
+        gazp = pins.checkpoint(C.prepare_gazetteer(gaz))
     out = {"gazetteer_prepared": gazp,
            **normalize_and_dedup(docs, gazp, cfg, pins)}
     docs_n, uaddr = out["docs_normalized"], out["unique_addresses"]

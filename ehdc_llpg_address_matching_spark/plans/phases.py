@@ -83,8 +83,7 @@ def run_phased(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
         return {t: strip_lineage(wh.load(t)) for t in tables}
 
     out = phase("p1_gazetteer",
-                lambda: {"gazetteer_prepared":
-                         pins.adopt(C.prepare_gazetteer(gaz))},
+                lambda: {"gazetteer_prepared": C.prepare_gazetteer(gaz)},
                 ["gazetteer_prepared"])
     gazp = pins.checkpoint(out["gazetteer_prepared"])
     out.update(phase("p2_normalize",

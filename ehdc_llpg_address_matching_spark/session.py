@@ -51,10 +51,11 @@ def spread_for_udf(df):
 def compact_reference_frame(df, target_bytes=64 << 20):
     """Size-derived repartition of a REFERENCE-side frame that callers
     cache and then re-scan from many downstream jobs (prepare_gazetteer).
-    A small gazetteer emerges from the UDF-spread + range-expansion
-    union as dozens of near-empty partitions, and every broadcast build
+    A small gazetteer emerges from the UDF spread (spread_for_udf) as
+    near-empty partitions, one per core, and every broadcast build
     and cache scan then pays per-task overhead for each of them — the
-    round-6 stage profile counted ~30 such scans inside the
+    round-6 stage profile (taken when the range expansion was a union
+    that doubled those partitions) counted ~30 such scans inside the
     candidate-union job alone (53 stages, ~1000 tasks, 307 s task time
     vs 144 s CPU), and an interleaved A/B measured the union wall
     dropping ~2-4 s at the bench corpus after compaction. The partition
@@ -103,10 +104,9 @@ class Pins:
 
     ``checkpoint`` materializes a frame and records its storage.
     ``adopt`` records the checkpoints a helper made inside a frame it
-    returns (prepare_gazetteer's pre-expansion cut, connected_components'
-    last round). Checkpoints under the ``keep`` frames, the caller's
-    inputs, are never recorded, so ``release`` cannot drop storage the
-    caller still reads."""
+    returns (connected_components' last round). Checkpoints under the
+    ``keep`` frames, the caller's inputs, are never recorded, so
+    ``release`` cannot drop storage the caller still reads."""
 
     def __init__(self, *keep):
         self._keep = {rdd.id() for df in keep if df is not None

@@ -62,21 +62,20 @@ def start_incremental_linkage(stream: DataFrame, gaz: DataFrame,
                               cfg=None, available_now: bool = True):
     """foreachBatch: run the batch pipeline per micro-batch. The
     gazetteer is prepared ONCE at stream start (normalize + range
-    expansion + blocking keys, eager localCheckpoint so the work is
-    materialized, not a lazy plan replayed per batch) and the closure
-    hands the prepared frame, the stream's one pin, to every micro-batch
-    run. Each batch releases its own run's checkpoints after its write,
-    so the pinned storage does not grow with the number of batches, and
-    the gazetteer pin is released when the query terminates (stopped,
-    drained or failed)."""
+    expansion + blocking keys) and materialized by one eager
+    localCheckpoint, so no batch replays its lazy plan; that checkpoint
+    is the stream's one pin, and the closure hands it to every
+    micro-batch run. Each batch releases its own run's checkpoints
+    after its write, so the pinned storage does not grow with the
+    number of batches, and the gazetteer pin is released when the query
+    terminates (stopped, drained or failed)."""
     from ..operators import candidates as C
     from ..pipeline import PipelineConfig, run_pipeline
     from ..session import Pins
     cfg = cfg or PipelineConfig(enable_vector=False, enable_spatial=False,
                                 enable_symspell=False)
-    inner, pin = Pins(gaz), Pins(gaz)
-    gazp = pin.checkpoint(inner.adopt(C.prepare_gazetteer(gaz)))
-    inner.release()  # prepare_gazetteer's own cut, now unread under gazp
+    pin = Pins(gaz)
+    gazp = pin.checkpoint(C.prepare_gazetteer(gaz))
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():

@@ -190,7 +190,7 @@ def test_stream_static_candidate_join(spark, tmp_path, corpus):
     src = str(tmp_path / "stream_src")
     docs.limit(40).write.parquet(src)
     pins = Pins(gaz)
-    gazp = pins.checkpoint(pins.adopt(prepare_gazetteer(gaz)))
+    gazp = pins.checkpoint(prepare_gazetteer(gaz))
     stream = read_document_stream(spark, src, max_files_per_trigger=2)
     assert stream.isStreaming
     cand = stream_static_candidates(stream, gazp)
@@ -240,7 +240,7 @@ def test_stream_static_candidates_normalize_once(spark, tmp_path, corpus):
     src = str(tmp_path / "once_src")
     docs.limit(40).write.parquet(src)
     pins = Pins(gaz)
-    gazp = pins.checkpoint(pins.adopt(prepare_gazetteer(gaz)))
+    gazp = pins.checkpoint(prepare_gazetteer(gaz))
     batch = stream_static_candidates(spark.read.parquet(src), gazp)
     assert physical_plan(batch).count("ArrowEvalPython") == 1
     q = (stream_static_candidates(read_document_stream(spark, src), gazp)
@@ -296,7 +296,7 @@ def test_stream_static_candidates_routes_agree(spark, tmp_path, corpus,
     docs.limit(60).repartition(2).write.parquet(src)
     assert len([n for n in os.listdir(src) if n.endswith(".parquet")]) == 2
     pins = Pins(gaz)
-    gazp = pins.checkpoint(pins.adopt(prepare_gazetteer(gaz)))
+    gazp = pins.checkpoint(prepare_gazetteer(gaz))
 
     def run(route):
         batch = stream_static_candidates(spark.read.parquet(src), gazp)
@@ -346,7 +346,7 @@ def test_stream_static_candidates_keyless_batch(spark, tmp_path, corpus,
          ("K_blank", span("text", "   ", None), None, None, None, None)],
         DOCUMENTS_SCHEMA).coalesce(1).write.parquet(src)
     pins = Pins(gaz)
-    gazp = pins.checkpoint(pins.adopt(prepare_gazetteer(gaz)))
+    gazp = pins.checkpoint(prepare_gazetteer(gaz))
     q, rows = _drain(stream_static_candidates(
         read_document_stream(spark, src), gazp), tmp_path, "keyless")
     pins.release()

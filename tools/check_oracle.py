@@ -49,7 +49,10 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
 
 def main():
     only = set(sys.argv[1:])
-    spark = get_spark(shuffle_partitions=8, master="local[8]")
+    # no console progress bar: it shares a \r-separated terminal line
+    # with the OK/FAIL lines, which a line-anchored grep then drops
+    spark = get_spark(shuffle_partitions=8, master="local[8]",
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "

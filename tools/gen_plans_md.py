@@ -122,14 +122,15 @@ SECTIONS = [
      lambda ctx: C.cand_hierarchical(ctx["uaddr"], ctx["gazp"]),
      "Both sides explode (level, key) structs and meet in ONE equi-join "
      "on (level, key). The gazetteer side keeps the top_k smallest "
-     "uprns per key with a row_number window; Spark cuts each key to "
-     "top_k rows in a WindowGroupLimit below it (and in a partial one "
+     "uprns per key with a dense_rank window (a range-expanded uprn's "
+     "rows share a rank); Spark cuts each key to its top_k uprns' "
+     "rows in a WindowGroupLimit below it (and in a partial one "
      "before the shuffle when the join is not broadcast), so a "
-     "town-sized locality key joins at most top_k rows per address. "
+     "town-sized locality key joins at most top_k uprns per address. "
      "The address side's windows (minimum "
      "level, then top_k by uprn) share one addr_id partitioning. No "
-     "semi-join probes, and no checkpoint leaf of its own: the only "
-     "`Scan ExistingRDD` nodes are the inputs' cached plans.",
+     "semi-join probes, and no checkpoint leaf of its own: any "
+     "`Scan ExistingRDD` node belongs to the inputs' cached plans.",
      r"HashJoin \[level|SortMergeJoin \[level|WindowGroupLimit \[level|"
      r"LeftSemi|ExistingRDD"),
     ("J6 spatial proximity grid join",
