@@ -100,13 +100,19 @@ def prepare_gazetteer(gaz: DataFrame) -> DataFrame:
             if c in gaz.columns]
     from ..functions.normalize import with_normalized
     from ..session import compact_reference_frame, spread_for_udf
-    g = with_normalized(spread_for_udf(gaz.drop(*drop)),
-                        raw_col="full_address")
+    src = gaz.drop(*drop)
+    g = with_normalized(spread_for_udf(src), raw_col="full_address")
     # compact the reference frame before callers cache it: the UDF
     # spread leaves a small gazetteer as near-empty partitions that
     # every downstream broadcast build re-scans
-    # (session.compact_reference_frame — size-derived, no-op at scale)
-    return compact_reference_frame(with_blocking_keys(expand_ranges(g)))
+    # (session.compact_reference_frame — size-derived, no-op at scale).
+    # Every step after the spread is narrow, so the frame keeps the
+    # spread's partitions: the scan's, or at least the default
+    # parallelism
+    parts = max(src.rdd.getNumPartitions(),
+                src.sparkSession.sparkContext.defaultParallelism)
+    return compact_reference_frame(with_blocking_keys(expand_ranges(g)),
+                                   parts)
 
 
 def prepare_unique_addresses(docs_norm: DataFrame) -> DataFrame:
@@ -249,95 +255,91 @@ def cand_blocked(uaddr: DataFrame, gazp: DataFrame) -> DataFrame:
             .withColumn("method", F.lit("blocked_fuzzy")))
 
 
+def _kind_key(kind: int, parts: list, *tail) -> "F.Column":
+    """A (kind, key) struct, key = array(*parts, *tail), or null unless
+    every part is non-empty (tail parts are not checked). Arrays of
+    different lengths never compare equal, so no separator is needed."""
+    ok = F.lit(True)
+    for p in parts:
+        ok = ok & (p != "")
+    return F.when(ok, F.struct(F.lit(kind).alias("kind"),
+                               F.array(*parts, *tail).alias("key")))
+
+
+def _kind_keys(df: DataFrame, cols: list, *keys) -> DataFrame:
+    """cols of df, one row per non-null _kind_key struct of keys, with
+    its kind and key columns."""
+    return (df.select(*cols, F.explode(F.array_compact(F.array(*keys)))
+                      .alias("_k"))
+            .select("*", "_k.kind", "_k.key").drop("_k"))
+
+
+def _by_kind(vals) -> "F.Column":
+    """The kind-th of vals (kinds count from 1)."""
+    return F.element_at(F.array(*map(F.lit, vals)), F.col("kind"))
+
+
 def cand_component_joins(uaddr: DataFrame, gazp: DataFrame) -> DataFrame:
     """J4 component-equality strategies + J8 postcode-block join
     (reference: internal/matcher/engine_components_fixed.go:201-241,
-    322-599 + internal/engine/postcode_matcher.go:143-248):
-      (a) postcode + house-number equality        -> 'comp_pc_house'
-      (b) street + locality + house equality      -> 'comp_street_loc'
-      (c) FUZZY street (trigram >= FUZZY_STREET_SIM) with MANDATORY
-          house equality (engine_components_fixed.go:525-599's fix) —
-          phonetic-street + house as the blocking equi-join, trigram
-          verify after                            -> 'comp_fuzzy_road'
-      (d) business/property-name similarity >= NAME_SIM
-          (engine_components_fixed.go:378-448) — blocked on the name's
-          first token + locality                  -> 'business_name'
-      (e) full-postcode block (J8)                -> 'postcode_block'
-    All blocking steps are equi-joins on parsed component columns; the
-    strict validator downstream enforces the house rule. Trigram
-    verifies run in whole-stage codegen (trigram_sim_expr over hashed
-    gram arrays — identical values to the Python kernel)."""
-    nh = norm_house_expr
-    opt = lambda df, c: (F.col(c) if c in df.columns
-                         else F.lit("")).alias(c)
-    d = uaddr.select("addr_id",
-                     F.col("postcode").alias("d_pc2"),
-                     nh(F.col("c_house")).alias("d_h"),
-                     F.col("c_street").alias("d_st"),
-                     F.col("c_locality").alias("d_loc"),
-                     opt(uaddr, "c_name").alias("d_name"),
-                     opt(uaddr, "street_phonetic").alias("d_phon"))
-    g = gazp.select("uprn",
-                    F.col("postcode").alias("g_pc2"),
-                    nh(F.col("c_house")).alias("g_h"),
-                    F.col("c_street").alias("g_st"),
-                    F.col("c_locality").alias("g_loc"),
-                    opt(gazp, "c_name").alias("g_name"),
-                    opt(gazp, "street_phonetic").alias("g_phon"))
-    a = (d.filter((F.col("d_pc2") != "") & (F.col("d_h") != ""))
-         .join(g.filter((F.col("g_pc2") != "") & (F.col("g_h") != "")),
-               (F.col("d_pc2") == F.col("g_pc2")) &
-               (F.col("d_h") == F.col("g_h")))
-         .select("addr_id", "uprn")
-         .withColumn("method", F.lit("comp_pc_house")))
-    b = (d.filter((F.col("d_st") != "") & (F.col("d_h") != "") &
-                  (F.col("d_loc") != ""))
-         .join(g, (F.col("d_st") == F.col("g_st")) &
-               (F.col("d_h") == F.col("g_h")) &
-               (F.col("d_loc") == F.col("g_loc")))
-         .select("addr_id", "uprn")
-         .withColumn("method", F.lit("comp_street_loc")))
-    # (c): house equality IS the blocking key (with phonetic street to
-    # bound the block); exact trigram on the street verifies after.
-    # A pair whose street typo changes the phonetic skeleton still
-    # meets via the J3 blocked join; this strategy exists to catch
-    # same-sounding misspellings with a confirmed house number.
-    # (c)/(d) trigram verifies: gram arrays per side row, riding the
-    # equi-join (see trigram_grams_expr).
-    c = (d.filter((F.col("d_st") != "") & (F.col("d_h") != "") &
-                  (F.col("d_phon") != ""))
-         .withColumn("_dsg", trigram_grams_expr(F.col("d_st")))
-         .join(g.filter((F.col("g_st") != "") & (F.col("g_h") != "") &
-                        (F.col("g_phon") != ""))
-                .withColumn("_gsg", trigram_grams_expr(F.col("g_st"))),
-               (F.col("d_phon") == F.col("g_phon")) &
-               (F.col("d_h") == F.col("g_h")))
-         .filter(F.col("d_st") != F.col("g_st"))  # exact handled by (b)
-         .withColumn("_ssim", trigram_sim_expr(F.col("_dsg"), F.col("_gsg")))
-         .filter(F.col("_ssim") >= FUZZY_STREET_SIM)
-         .select("addr_id", "uprn")
-         .withColumn("method", F.lit("comp_fuzzy_road")))
-    # (d): property/business names ('ROSE COTTAGE', 'MARKS AND
-    # SPENCER'): block on (first name token, locality), trigram verify
-    nm = (d.filter(F.col("d_name") != "")
-          .withColumn("_tok1", F.split("d_name", " ").getItem(0))
-          .withColumn("_dng", trigram_grams_expr(F.col("d_name")))
-          .join(g.filter(F.col("g_name") != "")
-                 .withColumn("_tok1", F.split("g_name", " ").getItem(0))
-                 .withColumn("_gng", trigram_grams_expr(F.col("g_name"))),
-                "_tok1")
-          .filter((F.col("d_loc") == "") | (F.col("g_loc") == "") |
-                  (F.col("d_loc") == F.col("g_loc")))
-          .withColumn("_nsim", trigram_sim_expr(F.col("_dng"), F.col("_gng")))
-          .filter(F.col("_nsim") >= NAME_SIM)
-          .select("addr_id", "uprn")
-          .withColumn("method", F.lit("business_name")))
-    e = (d.filter(F.col("d_pc2") != "")
-         .join(g.filter(F.col("g_pc2") != ""),
-               F.col("d_pc2") == F.col("g_pc2"))
-         .select("addr_id", "uprn")
-         .withColumn("method", F.lit("postcode_block")))
-    return a.unionByName(b).unionByName(c).unionByName(nm).unionByName(e)
+    322-599 + internal/engine/postcode_matcher.go:143-248), as one
+    equi-join on (kind, key). A side row emits a kind's key only when
+    its key parts and the "needs" column are non-empty
+    (h = norm_house_expr(c_house)); the kind's check runs after the
+    join:
+
+      kind  key               needs   check                  method
+      1 (a) [postcode, h]                                    comp_pc_house
+      2 (b) [street, h, loc]                                 comp_street_loc
+      3 (c) [phonetic, h]     street  d_st != g_st, street   comp_fuzzy_road
+                                      trigram >= FUZZY_STREET_SIM
+      4 (d) [name's first     name    d_loc = '' OR g_loc =  business_name
+             token]                   '' OR d_loc = g_loc,
+                                      name trigram >= NAME_SIM
+      5 (e) [postcode]                                       postcode_block
+
+    (c) is the fuzzy street with MANDATORY house equality
+    (engine_components_fixed.go:525-599's fix): a street typo that
+    changes the phonetic skeleton still meets via the J3 blocked join.
+    (d) matches business/property names (engine_components_fixed.go:
+    378-448), e.g. 'ROSE COTTAGE'. The strict validator downstream
+    enforces the house rule. Gram arrays are computed once per
+    exploded side row of kinds 3 and 4 (trigram_grams_expr), and the
+    trigram checks run in whole-stage codegen (trigram_sim_expr).
+    c_name and street_phonetic may be absent: they read as ''."""
+    kind = F.col("kind")
+
+    def side(df, id_col, p):
+        pc, st, loc = (F.col(c) for c in ("postcode", "c_street",
+                                          "c_locality"))
+        name, phon = (F.col(c) if c in df.columns else F.lit("")
+                      for c in ("c_name", "street_phonetic"))
+        h = norm_house_expr(F.col("c_house"))
+        text = F.when(kind == 3, F.col(p + "st")).otherwise(F.col("_name"))
+        return (_kind_keys(df, [id_col, st.alias(p + "st"),
+                                loc.alias(p + "loc"), name.alias("_name")],
+                           _kind_key(1, [pc, h]), _kind_key(2, [st, h, loc]),
+                           F.when(st != "", _kind_key(3, [phon, h])),
+                           F.when(name != "", _kind_key(
+                               4, [], F.split(name, " ").getItem(0))),
+                           _kind_key(5, [pc]))
+                .withColumn(p + "g", F.when(kind.isin(3, 4),
+                                            trigram_grams_expr(text)))
+                .drop("_name"))
+
+    sim = trigram_sim_expr(F.col("d_g"), F.col("g_g"))
+    d_loc, g_loc = F.col("d_loc"), F.col("g_loc")
+    check = (F.when(kind == 3, (F.col("d_st") != F.col("g_st"))
+                    & (sim >= FUZZY_STREET_SIM))
+             .when(kind == 4, ((d_loc == "") | (g_loc == "") |
+                               (d_loc == g_loc)) & (sim >= NAME_SIM))
+             .otherwise(True))
+    return (side(uaddr, "addr_id", "d_")
+            .join(side(gazp, "uprn", "g_"), ["kind", "key"])
+            .filter(check)
+            .select("addr_id", "uprn", _by_kind(
+                ["comp_pc_house", "comp_street_loc", "comp_fuzzy_road",
+                 "business_name", "postcode_block"]).alias("method")))
 
 
 def cand_spatial(uaddr: DataFrame, gazp: DataFrame,
@@ -531,8 +533,8 @@ HIER_BASE = {
 def cand_hierarchical(uaddr: DataFrame, gazp: DataFrame,
                       top_k: int = 5) -> DataFrame:
     """J5: 5-level component cascade with stop-at-first-hit semantics,
-    as one equi-join on (level, key). A level's key is emitted only
-    when every part is non-empty:
+    as one equi-join on (kind, key), a key's kind being its level. A
+    level's key is emitted only when every part is non-empty:
 
       1 [postcode, house]   3 [street, locality]
       4 [street_phonetic]   5 [locality]
@@ -540,8 +542,7 @@ def cand_hierarchical(uaddr: DataFrame, gazp: DataFrame,
     Level 2 (street + house, and d_loc = '' OR g_loc = '' OR
     d_loc = g_loc) is keys too: a gazetteer row emits [st, h] and
     [st, h, g_loc]; a doc emits [st, h] when d_loc = '', else
-    [st, h, d_loc] and [st, h, '']. Arrays of different lengths never
-    compare equal, so no separator is needed.
+    [st, h, d_loc] and [st, h, ''] (_kind_key).
 
     The gazetteer side keeps only the top_k smallest uprns per
     (level, key) (dense_rank: a range-expanded uprn's rows share a
@@ -558,43 +559,28 @@ def cand_hierarchical(uaddr: DataFrame, gazp: DataFrame,
     h = norm_house_expr(F.col("c_house"))
     pc, st, loc, phon = (F.col(c) for c in ("postcode", "c_street",
                                             "c_locality", "street_phonetic"))
-
-    def key(level, parts, *tail):
-        ok = F.lit(True)
-        for p in parts:
-            ok = ok & (p != "")
-        return F.when(ok, F.struct(F.lit(level).alias("level"),
-                                   F.array(*parts, *tail).alias("key")))
-
-    def keys(df, id_col, *level_keys):
-        return (df.select(id_col, F.explode(F.array_compact(
-                    F.array(*level_keys))).alias("_k"))
-                .select(id_col, "_k.level", "_k.key"))
-
-    g = (keys(gazp, "uprn", key(1, [pc, h]), key(2, [st, h]),
-              key(2, [st, h], loc), key(3, [st, loc]), key(4, [phon]),
-              key(5, [loc]))
+    key = _kind_key  # a key's kind is its level
+    g = (_kind_keys(gazp, ["uprn"], key(1, [pc, h]), key(2, [st, h]),
+                    key(2, [st, h], loc), key(3, [st, loc]), key(4, [phon]),
+                    key(5, [loc]))
          .withColumn("_rn", F.dense_rank().over(
-             Window.partitionBy("level", "key").orderBy("uprn")))
+             Window.partitionBy("kind", "key").orderBy("uprn")))
          .filter(F.col("_rn") <= top_k))
-    d = keys(uaddr, "addr_id", key(1, [pc, h]),
-             F.when(loc == "", key(2, [st, h]))
-              .otherwise(key(2, [st, h], F.lit(""))),
-             key(2, [st, h, loc]), key(3, [st, loc]), key(4, [phon]),
-             key(5, [loc]))
+    d = _kind_keys(uaddr, ["addr_id"], key(1, [pc, h]),
+                   F.when(loc == "", key(2, [st, h]))
+                    .otherwise(key(2, [st, h], F.lit(""))),
+                   key(2, [st, h, loc]), key(3, [st, loc]), key(4, [phon]),
+                   key(5, [loc]))
     w = Window.partitionBy("addr_id")
-    by_level = lambda vals: F.element_at(F.array(*map(F.lit, vals)),
-                                         F.col("level"))
-    return (d.join(g, ["level", "key"])
-            .withColumn("_min", F.min("level").over(w))
-            .filter(F.col("level") == F.col("_min"))
-            .select("addr_id", "uprn", "level").distinct()
+    return (d.join(g, ["kind", "key"])
+            .withColumn("_min", F.min("kind").over(w))
+            .filter(F.col("kind") == F.col("_min"))
+            .select("addr_id", "uprn", "kind").distinct()
             .withColumn("_rn", F.row_number().over(w.orderBy("uprn")))
             .filter(F.col("_rn") <= top_k)
             .select("addr_id", "uprn",
-                    by_level(["hier_" + n for n in HIER_BASE])
-                    .alias("method"),
-                    by_level(HIER_BASE.values()).alias("method_conf")))
+                    _by_kind(["hier_" + n for n in HIER_BASE]).alias("method"),
+                    _by_kind(HIER_BASE.values()).alias("method_conf")))
 
 
 def cand_vector(uaddr: DataFrame, gazp: DataFrame, top_k: int = 10,

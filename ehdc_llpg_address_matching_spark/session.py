@@ -48,7 +48,7 @@ def spread_for_udf(df):
     return df
 
 
-def compact_reference_frame(df, target_bytes=64 << 20):
+def compact_reference_frame(df, partitions, target_bytes=64 << 20):
     """Size-derived repartition of a REFERENCE-side frame that callers
     cache and then re-scan from many downstream jobs (prepare_gazetteer).
     A small gazetteer emerges from the UDF spread (spread_for_udf) as
@@ -64,7 +64,11 @@ def compact_reference_frame(df, target_bytes=64 << 20):
     least halve the partition count — a cluster-scale gazetteer whose
     scan already produces ~split-sized partitions passes through
     untouched, so this is a no-op at real scale and never reduces the
-    parallelism of a big frame below its size-appropriate level."""
+    parallelism of a big frame below its size-appropriate level.
+    ``partitions`` is df's partition count as its caller knows it from
+    the plan it built: reading df.rdd would run the stages under an
+    adaptive plan's exchanges (spread_for_udf's repartition) as a job,
+    and the caller's materialization would then run them again."""
     try:
         size = int(df._jdf.queryExecution().optimizedPlan()
                    .stats().sizeInBytes())
@@ -73,7 +77,7 @@ def compact_reference_frame(df, target_bytes=64 << 20):
     sc = df.sparkSession.sparkContext
     n = int(max(1, min(size // target_bytes + 1,
                        sc.defaultParallelism * 4)))
-    if df.rdd.getNumPartitions() > 2 * n:
+    if partitions > 2 * n:
         return df.repartition(n)
     return df
 

@@ -124,6 +124,23 @@ def test_rule_and_hierarchical_no_cartesian(spark, prepared):
         assert r["nested_loop_joins"] == 0
 
 
+def test_component_joins_one_keyed_join(spark, prepared):
+    """J4/J8: the five component strategies are one equi-join on
+    (kind, key), and building the frame runs no Spark job."""
+    gazp, _, uaddr, _ = prepared
+    sc = spark.sparkContext
+    sc.setJobGroup("comp_build", "build cand_component_joins")
+    try:
+        df = C.cand_component_joins(uaddr, gazp)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("comp_build") == []
+    r = plan_report(df)
+    assert r["nested_loop_joins"] == 0
+    assert (r["sort_merge_joins"] + r["shuffled_hash_joins"]
+            + r["broadcast_hash_joins"]) == 1
+
+
 def test_wholestage_codegen_covers_column_features(spark, prepared):
     gazp, _, uaddr, _ = prepared
     cands = C.union_candidates(C.cand_exact_canonical(uaddr, gazp))

@@ -250,3 +250,81 @@ def test_cand_hierarchical_matches_cascade_reference(spark, docs, gaz,
     got = {(r["addr_id"], r["uprn"], r["method"], r["method_conf"])
            for r in cand_hierarchical(ua, gazp, top_k=top_k).collect()}
     assert got == _hier_reference(docs, gaz, top_k)
+
+
+def _trigram_sim(a, b):
+    """Set Jaccard of pg_trgm 3-grams: per word, pad '  w ' and slide 3."""
+    grams = lambda s: {f"  {w} "[i:i + 3] for w in s.split(" ") if w
+                       for i in range(len(w) + 1)}
+    ga, gb = grams(a), grams(b)
+    return len(ga & gb) / len(ga | gb) if ga and gb else 0.0
+
+
+def _comp_reference(docs, gaz):
+    """Strategies (a)-(e) of cand_component_joins, pair by pair. Rows
+    are (id, postcode, house, street, locality, phonetic, name)."""
+    from ehdc_llpg_address_matching_spark.operators.candidates import (
+        FUZZY_STREET_SIM, NAME_SIM)
+    house = lambda r: (r[0], r[1], re.sub(r"[^0-9A-Z]", "", r[2].upper()),
+                       *r[3:])
+    strategies = {
+        "comp_pc_house": lambda d, g: d[1] != "" and d[2] != "" and
+        d[1] == g[1] and d[2] == g[2],
+        "comp_street_loc": lambda d, g: "" not in (d[3], d[2], d[4]) and
+        (d[3], d[2], d[4]) == (g[3], g[2], g[4]),
+        "comp_fuzzy_road": lambda d, g: "" not in (d[3], d[2], d[5]) and
+        "" not in (g[3], g[2], g[5]) and (d[5], d[2]) == (g[5], g[2]) and
+        d[3] != g[3] and _trigram_sim(d[3], g[3]) >= FUZZY_STREET_SIM,
+        "business_name": lambda d, g: d[6] != "" and g[6] != "" and
+        d[6].split(" ")[0] == g[6].split(" ")[0] and
+        (d[4] == "" or g[4] == "" or d[4] == g[4]) and
+        _trigram_sim(d[6], g[6]) >= NAME_SIM,
+        "postcode_block": lambda d, g: d[1] != "" and d[1] == g[1],
+    }
+    return {(d[0], g[0], m)
+            for d in map(house, docs) for g in map(house, gaz)
+            for m, hit in strategies.items() if hit(d, g)}
+
+
+# streets and names whose trigram similarity is above (LANE/LANES EAST:
+# 0.83), exactly at (ROSE COTTAGE/COTTAGES: 0.8) and below the 0.8 gates,
+# with shared first name tokens; phonetic codes are drawn independently
+# of the street, so equal and different streets share a code
+_comp_row = st.tuples(
+    _comp("P1", "P2"), _comp("1", "1a", "1 A", "2"),
+    _comp("GREEN LANE EAST", "GREEN LANES EAST", "GREEN LANE"),
+    _comp("L1", "L2"), _comp("PH1", "PH2"),
+    _comp("ROSE COTTAGE", "ROSE COTTAGES", "ROSE COTTAGE EAST",
+          "ROSE FARM"))
+# fixed rows on every draw: one name under each case of the locality
+# rule (doc locality empty; gazetteer locality empty, equal, different)
+# and a fuzzy street pair under one phonetic code
+_COMP_GAZ = [("", "", "", "", "", "ROSE COTTAGES"),
+             ("", "", "", "L1", "", "ROSE COTTAGE"),
+             ("", "7", "GREEN LANES EAST", "", "PH1", "")]
+_COMP_DOCS = [("", "", "", "", "", "ROSE COTTAGE"),
+              ("", "", "", "L1", "", "ROSE COTTAGE"),
+              ("", "", "", "L2", "", "ROSE COTTAGES"),
+              ("", "7", "GREEN LANE EAST", "L1", "PH1", "")]
+
+
+@given(st.lists(_comp_row, max_size=12),
+       st.lists(st.tuples(st.integers(0, 9), _comp_row), max_size=16))
+@settings(max_examples=15, deadline=None)
+def test_cand_component_joins_matches_reference(spark, docs, gaz):
+    """cand_component_joins equals a pure-Python statement of its five
+    strategies over colliding components, duplicate uprns, fuzzy
+    streets under one phonetic code, names sharing a first token and
+    every case of the locality rule."""
+    from ehdc_llpg_address_matching_spark.operators.candidates import \
+        cand_component_joins
+    docs = [(f"a{i}", *r) for i, r in enumerate(_COMP_DOCS + docs)]
+    gaz = ([(f"u{90 + i}", *r) for i, r in enumerate(_COMP_GAZ)] +
+           [(f"u{i}", *r) for i, r in gaz])
+    cols = "postcode string, c_house string, c_street string, " \
+           "c_locality string, street_phonetic string, c_name string"
+    ua = spark.createDataFrame(docs, "addr_id string, " + cols)
+    gazp = spark.createDataFrame(gaz, "uprn string, " + cols)
+    got = {(r["addr_id"], r["uprn"], r["method"])
+           for r in cand_component_joins(ua, gazp).collect()}
+    assert got == _comp_reference(docs, gaz)

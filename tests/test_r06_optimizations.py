@@ -159,6 +159,31 @@ def test_spread_for_udf_spreads_and_noops(spark):
     assert spread_for_udf(wide).rdd.getNumPartitions() == p + 4
 
 
+def test_prepare_gazetteer_builds_without_jobs(spark, tmp_path):
+    """prepare_gazetteer decides its compaction from partition counts
+    known before anything runs: building it over a one-file parquet
+    gazetteer (spread to the default parallelism for the UDF) submits
+    no job, and the small frame is still compacted to one partition
+    wherever the spread leaves more than two."""
+    from ehdc_llpg_address_matching_spark.operators.candidates import \
+        prepare_gazetteer
+    from ehdc_llpg_address_matching_spark.synth import (SynthConfig,
+                                                        synth_tables)
+    gaz, _, _ = synth_tables(SynthConfig(seed=3, n_gazetteer=40, n_docs=1))
+    path = str(tmp_path / "gaz.parquet")
+    spark.createDataFrame(gaz).coalesce(1).write.parquet(path)
+    raw = spark.read.parquet(path)
+    sc = spark.sparkContext
+    sc.setJobGroup("gaz_build", "build prepare_gazetteer")
+    try:
+        gazp = prepare_gazetteer(raw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("gaz_build") == []
+    p = sc.defaultParallelism
+    assert gazp.rdd.getNumPartitions() == (1 if p > 2 else p)
+
+
 # ------------------------------------------- J5 level resolution
 
 def test_hierarchical_probe_fetch_mid_levels(spark):

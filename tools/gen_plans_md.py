@@ -112,6 +112,18 @@ SECTIONS = [
      "equi-joined; hot keys salted (doc side pmod(xxhash64), gaz side "
      "exploded xS). AQE skew-join is enabled on top.",
      r"Join|Exchange hashpartitioning"),
+    ("J4/J8 component joins: one keyed join",
+     lambda ctx: C.cand_component_joins(ctx["uaddr"], ctx["gazp"]),
+     "The five component strategies, (a) postcode + house, (b) street "
+     "+ house + locality, (c) phonetic street + house, (d) the name's "
+     "first token and (e) the postcode, are (kind, key) structs that "
+     "both sides explode and meet in ONE equi-join on (kind, key). "
+     "Trigram gram arrays are built once per exploded side row, for "
+     "kinds 3 and 4 only; one CASE condition on the join runs the "
+     "fuzzy-street check, the business-name check and its locality "
+     "rule, and the method comes from the kind by element_at. No "
+     "union of per-strategy joins, no nested-loop join.",
+     r"HashJoin \[kind|SortMergeJoin \[kind|Filter CASE|CartesianProduct"),
     ("Scoring + decision chain", _scoring,
      "Exactly ONE ArrowEvalPython for the pair-scoring UDF (`_feat`); "
      "the cheap JVM prefilter sits below it; keep-best is a partial-"
@@ -131,7 +143,7 @@ SECTIONS = [
      "level, then top_k by uprn) share one addr_id partitioning. No "
      "semi-join probes, and no checkpoint leaf of its own: any "
      "`Scan ExistingRDD` node belongs to the inputs' cached plans.",
-     r"HashJoin \[level|SortMergeJoin \[level|WindowGroupLimit \[level|"
+     r"HashJoin \[kind|SortMergeJoin \[kind|WindowGroupLimit \[kind|"
      r"LeftSemi|ExistingRDD"),
     ("J6 spatial proximity grid join",
      lambda ctx: C.cand_spatial(ctx["uaddr"], ctx["gazp"]),
